@@ -65,7 +65,12 @@ def sql_query(
     dfsql/__init__.py:12,22 — e.g. ``{"case_sensitive": False}``).
     Unlike the reference there is no CSV round-trip: pandas input
     crosses to the JVM once via Arrow, Spark DataFrames are registered
-    as-is, and views are dropped afterwards.
+    as-is, and views and custom functions are dropped afterwards.
+
+    The one-shot ``DataSource`` does not cache (``cache=False``) unless
+    ``ds_kwargs`` sets ``cache``: its views live for one query, and a
+    pandas table is already in JVM memory, so a cache pin would only
+    add a job.
     """
     if not table_dfs:
         raise DfsqlException("At least one table must be provided")
@@ -78,12 +83,11 @@ def sql_query(
             raise DfsqlException(
                 f"Table {name} is not used in the query"
             )
-    ds = DataSource(spark=spark, **(ds_kwargs or {}))
-    if custom_functions:
-        for fname, fn in custom_functions.items():
-            ds.register_function(fname, fn)
+    ds = DataSource(spark=spark, **{"cache": False, **(ds_kwargs or {})})
     registered = []
     try:
+        for fname, fn in (custom_functions or {}).items():
+            ds.register_function(fname, fn)
         for name, df in table_dfs.items():
             if not isinstance(df, (pd.DataFrame, DataFrame)):
                 raise QueryExecutionException(
@@ -95,6 +99,7 @@ def sql_query(
     finally:
         for name in registered:
             spark.catalog.dropTempView(name)
+        ds.function_registry.drop_all()
 
 
 # importing the package registers the pandas ``.sql`` accessor

@@ -136,16 +136,34 @@ class DataSource:
         old = self._resolve_name(name)
         self.cache.evict(self.spark, old)
         self.tables.pop(old, None)
-        self.tables[name] = TableInfo(name=name, fpath=fpath, format=fmt, options=options)
+        self.tables[name] = TableInfo(
+            name=name,
+            fpath=fpath,
+            format=fmt,
+            options=options,
+            size_bytes=_path_size_bytes(fpath),
+        )
         self.save_metadata()
 
     def add_table(self, name: str, df: "DataFrame | pd.DataFrame") -> None:
         """Register an in-memory table.  pandas input goes through
         Arrow (``spark.createDataFrame``) — never a CSV round-trip
         (the reference's CSV round-trip in dfsql/__init__.py:26-27 is
-        an implementation artifact we deliberately do not reproduce)."""
+        an implementation artifact we deliberately do not reproduce).
+
+        A pandas table gets one partition per Arrow batch
+        (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows), never
+        more than Spark's default.  A frame of up to one batch is then a
+        single partition, so GROUP BY, HAVING and ORDER BY over it plan
+        no exchange and a pandas UDF over it runs one Python task."""
         if isinstance(df, pd.DataFrame):
+            per_batch = int(
+                self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+            )
+            batches = max(1, -(-len(df) // per_batch)) if per_batch > 0 else 1
             df = self.spark.createDataFrame(df)
+            if batches < self.spark.sparkContext.defaultParallelism:
+                df = df.coalesce(batches)
         df.createOrReplaceTempView(name)
         old = self._resolve_name(name)
         self.cache.evict(self.spark, old)
@@ -323,7 +341,8 @@ class DataSource:
         auto-caching is right for dim-sized tables and wrong for a
         100 TB fact table.  File tables above
         ``Configuration.AUTO_CACHE_MAX_BYTES`` (or whose size can't be
-        cheaply stat'ed — remote paths) are skipped; explicit
+        cheaply stat'ed — remote paths) are skipped; the size is taken
+        once, when the table is registered.  Explicit
         :meth:`cache_table` always pins, gate or no gate."""
         words = set(re.findall(r"[A-Za-z_][A-Za-z_0-9]*", sql))
         if not self.case_sensitive:
@@ -340,8 +359,7 @@ class DataSource:
         if not limit or info.fpath is None:
             # gate disabled, or in-memory table (already materialized)
             return True
-        size = _path_size_bytes(info.fpath)
-        return size is not None and size <= limit
+        return info.size_bytes is not None and info.size_bytes <= limit
 
     def query(self, sql: str, reduce_output: bool = True):
         """Reference-compatible entry point: materializes the result as

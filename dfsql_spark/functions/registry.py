@@ -168,6 +168,14 @@ class FunctionRegistry:
         base_data_source.py:192-198)."""
         return {k: rf.internal_name for k, rf in self.functions.items()}
 
+    def drop_all(self) -> None:
+        """Remove this registry's functions from the session registry;
+        a one-shot ``sql_query`` calls it so its functions do not pile
+        up in a long-lived session."""
+        for rf in self.functions.values():
+            self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {rf.internal_name}")
+        self.functions.clear()
+
     def register_scalar(
         self,
         name: str,

@@ -54,6 +54,9 @@ class TableInfo:
     fpath: str | None = None  # None → in-memory (DataFrame-backed)
     format: str | None = None
     options: dict = field(default_factory=dict)
+    # bytes on disk at registration, for the auto-cache size gate;
+    # None when the path can't be cheaply stat'ed (remote URI)
+    size_bytes: int | None = None
 
     def to_metadata(self) -> dict:
         return {

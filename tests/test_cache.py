@@ -124,6 +124,31 @@ def test_cache_on_access_size_gate(spark, tmp_path):
         spark.catalog.dropTempView("gated_tbl")
 
 
+def test_size_gate_stats_file_once(spark, tmp_path, monkeypatch):
+    """The size gate's bytes are taken when the table is registered,
+    not by walking the path on every query that references it."""
+    import dfsql_spark.datasource as datasource
+
+    csv = tmp_path / "sized.csv"
+    csv.write_text("x\n1\n2\n")
+    calls = []
+    real = datasource._path_size_bytes
+    monkeypatch.setattr(
+        datasource, "_path_size_bytes", lambda p: calls.append(p) or real(p)
+    )
+    ds = DataSource(spark=spark, cache=MemoryCache(maxsize=4))
+    ds.add_table_from_file("sized_tbl", str(csv))
+    try:
+        assert ds.tables["sized_tbl"].size_bytes == csv.stat().st_size
+        for _ in range(3):
+            assert ds.query("SELECT SUM(x) AS s FROM sized_tbl") == 3
+        assert calls == [str(csv)]
+        assert ds.cache.hits == 2
+    finally:
+        ds.cache.clear(spark)
+        spark.catalog.dropTempView("sized_tbl")
+
+
 def test_drop_table_evicts(ds, spark):
     ds.cache_table("ca")
     ds.drop_table("ca")
