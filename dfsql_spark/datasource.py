@@ -151,19 +151,20 @@ class DataSource:
         (the reference's CSV round-trip in dfsql/__init__.py:26-27 is
         an implementation artifact we deliberately do not reproduce).
 
-        A pandas table gets one partition per Arrow batch
-        (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows), never
-        more than Spark's default.  A frame of up to one batch is then a
+        A pandas frame of up to one Arrow batch
+        (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) is a
         single partition, so GROUP BY, HAVING and ORDER BY over it plan
-        no exchange and a pandas UDF over it runs one Python task."""
+        no exchange and a pandas UDF over it runs one Python task.
+        Larger frames, and any frame when the batch size is unlimited
+        (``<= 0``), keep the partitions ``createDataFrame`` gives them."""
         if isinstance(df, pd.DataFrame):
             per_batch = int(
                 self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
             )
-            batches = max(1, -(-len(df) // per_batch)) if per_batch > 0 else 1
+            small = len(df) <= per_batch
             df = self.spark.createDataFrame(df)
-            if batches < self.spark.sparkContext.defaultParallelism:
-                df = df.coalesce(batches)
+            if small:
+                df = df.coalesce(1)
         df.createOrReplaceTempView(name)
         old = self._resolve_name(name)
         self.cache.evict(self.spark, old)

@@ -2,9 +2,8 @@
 and the pandas ``.sql`` accessor).
 
 A one-shot query registers throwaway views, so it does not pin them in
-Spark's cache, and a pandas table gets one partition per Arrow batch:
-a small frame is a single partition, and GROUP BY / HAVING / ORDER BY
-over it plan no exchange.  These tests count Spark jobs and tasks with
+Spark's cache, and a pandas frame of up to one Arrow batch is a single
+partition, so GROUP BY / HAVING / ORDER BY over it plan no exchange.  These tests count Spark jobs and tasks with
 ``setJobGroup`` + ``statusTracker()``, so a plan regression fails here
 instead of hiding in wall-clock noise.
 """
@@ -143,22 +142,26 @@ def _partitions(spark, name: str) -> int:
     return spark.table(name).rdd.getNumPartitions()
 
 
-def test_pandas_table_one_partition_per_arrow_batch(spark, people, batch_rows):
+def test_pandas_table_up_to_one_arrow_batch_is_one_partition(spark, people, batch_rows):
     ds = DataSource(spark=spark, cache=False)
     try:
         ds.add_table("op_small", people)
         assert _partitions(spark, "op_small") == 1
-        batch_rows(400)  # 1,000 rows -> 3 batches
-        ds.add_table("op_batches", people)
-        default = spark.sparkContext.defaultParallelism
-        assert _partitions(spark, "op_batches") == min(3, default)
+        batch_rows(len(people))  # exactly one batch
+        ds.add_table("op_one_batch", people)
+        assert _partitions(spark, "op_one_batch") == 1
     finally:
-        for name in ("op_small", "op_batches"):
+        for name in ("op_small", "op_one_batch"):
             spark.catalog.dropTempView(name)
 
 
-def test_large_pandas_table_never_gains_partitions(spark, people, batch_rows):
-    batch_rows(10)  # 1,000 rows -> 100 batches, more than Spark's default
+# 999 and 400: just over one batch, and a few batches; 10: more batches
+# than Spark's default; 0 and -1: no batch limit
+@pytest.mark.parametrize("per_batch", [999, 400, 10, 0, -1])
+def test_larger_pandas_table_keeps_create_dataframe_partitions(
+    spark, people, batch_rows, per_batch
+):
+    batch_rows(per_batch)
     plain = spark.createDataFrame(people).rdd.getNumPartitions()
     ds = DataSource(spark=spark, cache=False)
     try:
@@ -171,7 +174,7 @@ def test_large_pandas_table_never_gains_partitions(spark, people, batch_rows):
 @pytest.mark.parametrize("per_batch", [None, 300])
 def test_select_star_keeps_input_order(spark, people, batch_rows, per_batch):
     if per_batch:
-        batch_rows(per_batch)  # several partitions, coalesced in order
+        batch_rows(per_batch)  # several partitions, as createDataFrame made them
     shuffled = people.sample(frac=1.0, random_state=3).reset_index(drop=True)
     out = sql_query("SELECT * FROM t", t=shuffled)
     pd.testing.assert_frame_equal(out, shuffled, check_dtype=False)
