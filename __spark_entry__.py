@@ -829,10 +829,10 @@ def _doc_shingles(spark, sf):
     recompute, and the entry survives across the two queries.
     """
     if sf not in _SHINGLE_CACHE:
-        from dfsql_spark.operators.dedup import _materialize, shingle_sets
+        from dfsql_spark.operators.dedup import _persist, shingle_sets
 
-        _SHINGLE_CACHE[sf] = _materialize(
-            shingle_sets(_t(spark, sf, "documents"), k=5), "persist"
+        _SHINGLE_CACHE[sf] = _persist(
+            shingle_sets(_t(spark, sf, "documents"), k=5)
         )
     return _SHINGLE_CACHE[sf]
 
@@ -849,14 +849,13 @@ def _exact_jaccard_pairs(spark, sf):
     and sharing it means ONE prefix-filter join feeds all three queries
     instead of three."""
     if sf not in _EXACT_PAIRS_CACHE:
-        from dfsql_spark.operators.dedup import _materialize, ngram_jaccard_pairs
+        from dfsql_spark.operators.dedup import _persist, ngram_jaccard_pairs
 
         docs = _t(spark, sf, "documents")
-        _EXACT_PAIRS_CACHE[sf] = _materialize(
+        _EXACT_PAIRS_CACHE[sf] = _persist(
             ngram_jaccard_pairs(
                 docs, k=5, threshold=0.6, sets=_doc_shingles(spark, sf)
-            ),
-            "persist",
+            )
         )
     return _EXACT_PAIRS_CACHE[sf]
 
@@ -2492,11 +2491,7 @@ def bench_lm_score(spark, sf):
 
     docs = _t(spark, sf, "documents")
     train = docs.filter(F.col("source").isin("src0", "src1"))
-    # explicit persist opt-in (the library default is stateless
-    # 'none'): the harness releases via release_caches() between
-    # passes, so the 6-scans->3 unigram reuse is safe here and keeps
-    # the r8+ trend comparable
-    return lm_score(docs, train, materialize="persist")
+    return lm_score(docs, train)
 
 
 def t20_epoch_shuffle(spark, sf):
@@ -3060,7 +3055,7 @@ def release_caches() -> int:
     from dfsql_spark.operators import dedup as _dedup
 
     # The memoized DataFrames were all persisted via the operators'
-    # _materialize, so they're already tracked in the dedup module's
+    # _persist, so they're already tracked in the dedup module's
     # registry — clearing the memo dicts here and letting
     # release_persists() do the unpersisting counts each persist
     # exactly once.

@@ -76,39 +76,24 @@ def char_shingles(text_col: str, k: int = 5) -> Column:
 _SHINGLE_UDFS: dict = {}
 
 
-def _materialize(df: DataFrame, how: str) -> DataFrame:
-    """Materialize an intermediate that downstream plans reference more
-    than once.  ``how`` picks the fault-tolerance/speed tradeoff:
-
-    * ``"local"`` — ``localCheckpoint(eager=True)``: truncates lineage
-      and stores blocks on executors only.  Fast, and blocks are
-      released by the ContextCleaner when the DataFrame is GC'd, but an
-      executor loss (preemption, dynamic allocation) makes downstream
-      jobs fail unrecoverably — no lineage remains to recompute.  Right
-      for local mode and bounded intermediates.
-    * ``"persist"`` — ``persist(MEMORY_AND_DISK)`` + an eager count():
-      keeps lineage, so lost blocks recompute after executor loss — the
-      safe default on a multi-executor cluster.  The CacheManager holds
-      the entry until ``unpersist()``/``clearCache()``; long-lived
-      sessions issuing many calls should unpersist results when done.
-    * ``"none"`` — no-op; the caller manages caching (e.g. passes an
-      already-materialized ``sets=``).
+def _persist(df: DataFrame) -> DataFrame:
+    """Pin an intermediate that downstream plans reference more than
+    once: ``persist(MEMORY_AND_DISK)``, an eager ``count()`` and
+    registration in ``_LIVE_PERSISTS``.  Persist keeps lineage, so
+    lost blocks recompute after executor loss.  The eager count makes
+    the ``InMemoryRelation``'s size exact before the consumers are
+    planned, which can decide their broadcast joins.  The CacheManager
+    holds the entry until :func:`release_persists`.
     """
-    if how == "local":
-        return df.localCheckpoint(eager=True)
-    if how == "persist":
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        _LIVE_PERSISTS.append(df)
-        return df
-    if how == "none":
-        return df
-    raise ValueError(f"materialize must be 'local', 'persist' or 'none', got {how!r}")
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    _LIVE_PERSISTS.append(df)
+    return df
 
 
-# Every persist() issued by _materialize is tracked here so long-lived
+# Every persist() issued by _persist is tracked here so long-lived
 # sessions can release the blocks: the CacheManager otherwise holds
 # them until session teardown, which on a shared cluster pins executor
 # memory unboundedly as a pipeline issues many operator calls.
@@ -116,8 +101,8 @@ _LIVE_PERSISTS: list[DataFrame] = []
 
 
 def release_persists() -> int:
-    """Unpersist every DataFrame materialized by the operators in this
-    module since the last call; returns how many were released.
+    """Unpersist every DataFrame the operators pinned with
+    :func:`_persist` since the last call; returns how many were released.
     Blocking=False: block deletion proceeds asynchronously, callers
     don't wait on executor round-trips.
 
@@ -396,7 +381,7 @@ def ngram_jaccard_pairs(
             # materialization feeds whichever physical path wins, so
             # the shingling UDF runs exactly once.
             if not materialized:
-                sets = _materialize(sets, "local")
+                sets = sets.localCheckpoint()
                 materialized = True
             vocab = (
                 sets.select(F.explode("shs").alias("sh"))
@@ -465,7 +450,7 @@ def ngram_jaccard_pairs(
     LAST_NGRAM_STRATEGY.update(_info)
     if strategy == "dense":
         if not materialized:
-            sets = _materialize(sets, "local")
+            sets = sets.localCheckpoint()
         return _ngram_jaccard_dense(sets, threshold, max_shingle_freq)
 
     ex = sets.select("id", F.explode("shs").alias("sh"))
@@ -840,7 +825,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     verify_threshold: float | None = None,
     sets: DataFrame | None = None,
-    materialize: str = "persist",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH.
 
@@ -852,11 +836,8 @@ def minhash_lsh_pairs(
 
     ``sets=`` accepts a pre-materialized :func:`shingle_sets` DataFrame
     (share one shingling pass with :func:`ngram_jaccard_pairs`).
-    ``materialize`` picks how the signature table is pinned — see
-    :func:`_materialize`.  Default is ``"persist"``: this is the scale
-    path, and on a real cluster executor loss must be recoverable via
-    lineage; ``"local"`` (localCheckpoint) is marginally cheaper in
-    single-JVM local mode but unrecoverable on executor loss.
+    Pins the signature table with :func:`_persist` (lineage survives
+    executor loss); :func:`release_persists` frees it.
     """
     r = num_perm // bands
     sigs = minhash_signatures(df, text_col, id_col, k, num_perm, seed, sets=sets)
@@ -870,9 +851,9 @@ def minhash_lsh_pairs(
     # noise of each other; on a quiet box both settle at 5-7 s
     # (persist slightly ahead: 4.6/5.4 vs 6.4/6.8).  The round-2 d03
     # bench doubling (5.6→11.2 s) falls inside this same machine-load
-    # variance band, not the materialization strategy.  persist is the
-    # default: same speed, and lineage survives executor loss.
-    sigs = _materialize(sigs, materialize)
+    # variance band, not the materialization strategy.  persist: same
+    # speed, and lineage survives executor loss.
+    sigs = _persist(sigs)
     return _banded_lsh_pairs(sigs, num_perm, bands, verify_threshold)
 
 
@@ -1018,6 +999,9 @@ def minhash_dedup(
     larger id of every pair, no component resolution).  Footgun: on
     chains it drops b and c even when a~c is false — only use it when
     pairs are already transitive (very high thresholds).
+
+    Pins :func:`minhash_lsh_pairs`'s signature table;
+    :func:`release_persists` frees it.
     """
     pairs = minhash_lsh_pairs(df, text_col, id_col, **lsh_kwargs)
     if resolve == "components":
@@ -1130,7 +1114,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    materialize: str = "local",
 ) -> DataFrame:
     """(id, component) for every node in ``pairs``, where component =
     the minimum id reachable through the pair graph.
@@ -1172,29 +1155,19 @@ def connected_components(
     partition-preserving persist only pays when the static side is
     much larger than the per-round side.
 
-    ``materialize="local"`` (default) truncates via ``localCheckpoint``
-    — right for local mode, but blocks live only on executors, so an
-    executor loss kills the job.  Iterative persist can't substitute
-    here (lineage would still chain across rounds, and recomputing
-    round N replays every earlier round), so cluster deployments that
-    need fault tolerance pass ``materialize="checkpoint"``: reliable
-    ``checkpoint()`` to the configured ``setCheckpointDir`` — each
-    round's labels land on stable storage and lineage truncates there.
+    Each round truncates lineage with ``localCheckpoint``: blocks
+    live only on executors (an executor loss fails the job) and are
+    released when the DataFrame is garbage-collected.  Persist can't
+    substitute here: lineage would still chain across rounds, and
+    recomputing round N replays every earlier round.
     """
-    if materialize not in ("local", "checkpoint"):
-        raise ValueError(
-            f"materialize must be 'local' or 'checkpoint', got {materialize!r}"
-        )
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-
-    def _truncate(d: DataFrame) -> DataFrame:
-        return d.localCheckpoint() if materialize == "local" else d.checkpoint()
 
     # both orientations from ONE pass over the pair plan (round-12
     # scan review: the old self-union re-executed `pairs` — often an
     # expensive upstream dedup plan — twice before the truncation)
-    edges = _truncate(
+    edges = (
         pairs.select(
             F.explode(
                 F.array(
@@ -1209,11 +1182,13 @@ def connected_components(
         )
         .select("e.src", "e.dst")
         .distinct()
+        .localCheckpoint()
     )
-    labels = _truncate(
+    labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        .localCheckpoint()
     )
 
     # max_iter + 1: convergence is observed, not predicted — a graph
@@ -1232,7 +1207,7 @@ def connected_components(
         # output — the alternative (joining new labels back to old
         # labels) costs an extra shuffle join per round for the same
         # information.
-        cand = _truncate(
+        cand = (
             labels.join(neighbor_min, labels.node == neighbor_min.nd, "left")
             .select(
                 "node",
@@ -1241,6 +1216,7 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
                 ).alias("label"),
             )
+            .localCheckpoint()
         )
         changed = cand.filter(F.col("label") != F.col("old_label")).count()
         labels = cand.select("node", "label")
@@ -1465,7 +1441,8 @@ def incremental_minhash_dedup(
 
     Measured at sf1 (50 k docs, local[32]): ~12 s end-to-end for the
     pair stage, persist-vs-lazy signatures A/B neutral (see inline
-    comment); the band join is the only corpus-volume stage.
+    comment); the band join is the only corpus-volume stage.  Pins the
+    delta+base signature table; :func:`release_persists` frees it.
     """
     if base_sigs is None:
         if base_df is None:
@@ -1485,7 +1462,7 @@ def incremental_minhash_dedup(
     # best-effort (AQE re-planning or any per-side difference defeats
     # it), while the persist guarantees one sketch pass and keeps the
     # same tracked-release lifecycle as minhash_lsh_pairs.
-    sigs = _materialize(sigs, "persist")
+    sigs = _persist(sigs)
     pairs = _banded_lsh_pairs(
         sigs, num_perm, bands, verify_threshold, flag_col="_is_base"
     )
@@ -2120,7 +2097,6 @@ def source_overlap_matrix(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    materialize: str = "persist",
 ) -> DataFrame:
     """Cross-source contamination matrix: for every ORDERED pair of
     sources ``(a, b)``, the fraction of ``a``'s documents that also
@@ -2148,16 +2124,17 @@ def source_overlap_matrix(
     SQL oracle.
 
     Scale shape (exact): one scan → distinct ``(source, hash128)``
-    (map-side combined), MATERIALIZED (``materialize``, forwarded to
-    :func:`_materialize`; release via :func:`release_persists`) —
+    (map-side combined), PINNED (:func:`_persist`; release via
+    :func:`release_persists`) —
     it feeds the size aggregate AND both self-join sides, and without
     the pin each consumer recomputes the scan+distinct (plan-verified
     4 corpus scans → 1).  The self-join key is the 16-byte hash, the
     per-pair count is ``#sources²`` rows, and the completing cross
     join multiplies two #sources-sized aggregates — nothing corpus-
     sized survives the pinned distinct.  (minhash): the candidate
-    pair table is materialized the same way (it is consumed once per
-    direction); only ids and band hashes shuffle.
+    pair table is pinned the same way (it is consumed once per
+    direction), next to :func:`minhash_lsh_pairs`'s signature table;
+    only ids and band hashes shuffle.
 
     Output: ``(src_a, src_b, n_a, n_b, n_common, frac_a_in_b)``.
     """
@@ -2174,7 +2151,7 @@ def source_overlap_matrix(
         # each hold a single blank doc would register as mutual
         # overlap, inflating frac_a_in_b for small sources
         # (round-11 advisor).
-        d = _materialize(
+        d = _persist(
             df.filter(src.isNotNull())
             .select(
                 src.alias("_src"),
@@ -2185,8 +2162,7 @@ def source_overlap_matrix(
                 "_src",
                 F.sha2(F.col("_t"), 256).substr(1, 32).alias("_h"),
             )
-            .distinct(),
-            materialize,
+            .distinct()
         )
         sizes = d.groupBy("_src").agg(F.count(F.lit(1)).alias("_n"))
         common = (
@@ -2205,7 +2181,7 @@ def source_overlap_matrix(
         docs = df.filter(src.isNotNull() & (F.length(norm) > 0))
         roster = docs.select(F.col(id_col).alias("_id"), src.alias("_src"))
         sizes = roster.groupBy("_src").agg(F.count(F.lit(1)).alias("_n"))
-        pairs = _materialize(
+        pairs = _persist(
             minhash_lsh_pairs(
                 docs,
                 text_col=text_col,
@@ -2214,9 +2190,7 @@ def source_overlap_matrix(
                 bands=bands,
                 seed=seed,
                 verify_threshold=threshold,
-                materialize=materialize,
-            ),
-            materialize,
+            )
         )
         # undirected pairs -> both directions, then source labels
         directed = pairs.select(

@@ -1238,7 +1238,7 @@ def heavy_hitter_ngrams(
         )
     if k_capacity < 1:
         raise ValueError(f"k_capacity must be >= 1, got {k_capacity}")
-    from .dedup import _materialize, _word_ngrams_expr
+    from .dedup import _word_ngrams_expr
 
     grams = df.select(_word_ngrams_expr(text_col, n).alias("_grams"))
 
@@ -1286,9 +1286,9 @@ def heavy_hitter_ngrams(
         )
         yield out
 
-    summaries = _materialize(
-        grams.mapInPandas(_mg_partition, "ngram string, cnt long"), "local"
-    )
+    summaries = grams.mapInPandas(
+        _mg_partition, "ngram string, cnt long"
+    ).localCheckpoint()
     total = (
         summaries.filter(F.col("ngram").isNull())
         .agg(F.sum("cnt").alias("t"))
@@ -1756,7 +1756,6 @@ def lm_score(
     id_col: str = "doc_id",
     alpha: float = 0.4,
     round_to: int = 6,
-    materialize: str = "none",
 ) -> DataFrame:
     """Bigram-LM fluency scoring with Stupid Backoff (Brants et al.,
     EMNLP 2007) — the CCNet / KenLM-style quality signal: train token
@@ -1764,16 +1763,13 @@ def lm_score(
     document by its average per-bigram log-probability under that
     model.
 
-    Pass ``materialize='persist'`` to cache the unigram table (it
-    feeds three plan branches; persisting cuts 6 train scans to 3) —
-    but that registers a live persist the CALLER must release via
-    :func:`~dfsql_spark.operators.dedup.release_persists` after the
-    scored DataFrame is consumed; repeated calls without a release
-    accumulate cached tables and pin executor memory.  The default
-    ``'none'`` keeps the operator stateless (the harnesses opt in and
-    release between passes).  Low scores flag boilerplate, gibberish, and
-    out-of-distribution text; the score feeds :func:`weighted_sample`
-    or a threshold filter.
+    Pins the unigram table (it feeds three plan branches; the pin cuts
+    6 train scans to 3).  The pin outlives the call: release it with
+    :func:`~dfsql_spark.operators.dedup.release_persists` once the
+    scored DataFrame is consumed, since repeated calls without a
+    release accumulate cached tables.  Low scores flag boilerplate,
+    gibberish, and out-of-distribution text; the score feeds
+    :func:`weighted_sample` or a threshold filter.
 
     Semantics (deterministic, engine-portable — a DuckDB oracle
     reproduces it): tokens are lowercased whitespace tokens; for each
@@ -1804,12 +1800,11 @@ def lm_score(
     the train slice is read TWICE in full (one unigram aggregate, one
     bigram aggregate) plus a shuffle-free limit-1 token probe that
     fails fast on an empty model before anything is computed or
-    persisted.  The unigram table is MATERIALIZED (``materialize``
-    forwards to :func:`~dfsql_spark.operators.dedup._materialize`
-    semantics; release via :func:`~dfsql_spark.operators.dedup.
-    release_persists`): it feeds the n_total aggregate and both the
-    w1- and w2-lookup joins, each of which would otherwise recompute
-    the aggregate from a fresh train scan (6 full scans → 3 total).
+    persisted.  The unigram table is PINNED
+    (:func:`~dfsql_spark.operators.dedup._persist`): it feeds the
+    n_total aggregate and both the w1- and w2-lookup joins, each of
+    which would otherwise recompute the aggregate from a fresh train
+    scan (6 full scans → 3 total).
 
     Output: ``(id_col, n_bigrams, avg_logp)``; docs with < 2 tokens
     keep ``n_bigrams = 0`` and NULL ``avg_logp`` via the NULL-pair
@@ -1834,20 +1829,18 @@ def lm_score(
     # would propagate a NULL n_total into every backoff branch and NULL
     # out every score downstream — fail loudly instead, BEFORE the
     # unigram aggregate is computed/persisted: explode + limit(1)
-    # short-circuits without a shuffle, the error path registers no
-    # persist, and materialize='none' callers never pay an aggregate
-    # just to probe.
+    # short-circuits without a shuffle and the error path registers no
+    # persist.
     if train_df.select(F.explode(toks)).filter(F.col("col") != "").limit(1).isEmpty():
         raise ValueError("train_df has no tokens — check the train-slice filter")
 
-    from .dedup import _materialize
+    from .dedup import _persist
 
-    uni = _materialize(
+    uni = _persist(
         train_df.select(F.explode(toks).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu")),
-        materialize,
+        .agg(F.count(F.lit(1)).alias("cu"))
     )
     total = uni.agg(F.sum("cu").alias("n_total"))
     bi = (
@@ -2805,7 +2798,6 @@ def dsir_log_weights(
     smoothing: float = 1.0,
     salt: str = "dsir",
     quantize: "int | None" = None,
-    materialize: str = "persist",
 ) -> DataFrame:
     """DSIR importance log-weights (Xie et al., NeurIPS 2023): score
     every raw-corpus document by ``log p_target(doc) − log p_raw(doc)``
@@ -2838,13 +2830,13 @@ def dsir_log_weights(
     tolerate); ``log_weight`` is then the exact integer total divided
     once by ``10^d``.  Default ``None`` keeps full-precision doubles.
 
-    ``materialize`` picks how the two bucket-count model tables are
-    pinned — see :func:`dfsql_spark.operators.dedup._materialize`.
-    Default ``"persist"``: the tables are parameter-bounded
-    (≤ ``buckets`` rows), so persist costs the same as a local
-    checkpoint while keeping lineage — on a cluster with dynamic
-    allocation / preemption an executor loss stays recoverable
-    (round-15 verdict item: ``"local"`` was local-mode-leaning).
+    Pins the two bucket-count model tables (target and raw, each
+    ≤ ``buckets`` rows) with
+    :func:`~dfsql_spark.operators.dedup._persist`, which keeps lineage,
+    so an executor loss stays recoverable.  The pins outlive the call:
+    release them with
+    :func:`~dfsql_spark.operators.dedup.release_persists` once the
+    weights are consumed.
     """
     from .dedup import _word_ngrams_expr
 
@@ -2871,14 +2863,13 @@ def dsir_log_weights(
     # (model pass + scoring pass) over the raw corpus and one pass
     # over the target.  Values are unchanged (same aggregates, read
     # once instead of recomputed).
-    from .dedup import _materialize
+    from .dedup import _persist
 
-    tgt_counts = _materialize(
-        bucketed(target).groupBy("_b").agg(F.count(F.lit(1)).alias("_ct")),
-        materialize,
+    tgt_counts = _persist(
+        bucketed(target).groupBy("_b").agg(F.count(F.lit(1)).alias("_ct"))
     )
-    raw_counts = _materialize(
-        raw_b.groupBy("_b").agg(F.count(F.lit(1)).alias("_cr")), materialize
+    raw_counts = _persist(
+        raw_b.groupBy("_b").agg(F.count(F.lit(1)).alias("_cr"))
     )
     t_total = tgt_counts.agg(F.sum("_ct")).first()[0] or 0
     r_total = raw_counts.agg(F.sum("_cr")).first()[0] or 0
@@ -3119,7 +3110,6 @@ def tfidf_top_terms(
     top_k: int = 5,
     min_df: int = 1,
     max_df_frac: float = 1.0,
-    materialize: str = "persist",
 ) -> DataFrame:
     """Top-``k`` TF-IDF terms per document — the classic keyword
     extraction / document-signature step (topic triage, cluster
@@ -3149,10 +3139,12 @@ def tfidf_top_terms(
     the term key; N is a broadcast 1-row agg over the pinned table
     too.  The final per-doc window re-shuffles the filtered
     ``(doc, term)`` table by doc id.  Nothing wider than (term, two
-    longs) moves after the first count.  ``materialize`` forwards to
-    :func:`~dfsql_spark.operators.dedup._materialize` semantics
-    ("persist" | "local" | "none"); release via
-    :func:`~dfsql_spark.operators.dedup.release_persists`.
+    longs) moves after the first count.  Two tables are pinned with
+    :func:`~dfsql_spark.operators.dedup._persist`: the tokenized
+    ``(doc, tokens)`` projection and the ``(doc, term, tf)`` counts.
+    The pins outlive the call: release them with
+    :func:`~dfsql_spark.operators.dedup.release_persists` once the
+    result is consumed.
 
     Output: ``(id_col, term, tf, df_t, score, rank)``.
     """
@@ -3164,24 +3156,22 @@ def tfidf_top_terms(
         raise ValueError(f"max_df_frac must be in (0, 1], got {max_df_frac}")
     from pyspark.sql.window import Window
 
-    from .dedup import _materialize
+    from .dedup import _persist
 
     # pin the tokenized projection FIRST: N and the (doc, term) table
     # both derive from it, so the upstream plan (which may be a whole
     # curation pipeline, not a bare scan) executes exactly once —
     # df.agg(count) on the raw input would re-run every upstream stage
-    base = _materialize(
+    base = _persist(
         df.select(
             F.col(id_col).alias("_id"),
             ws_tokens(text_col, lower=True).alias("_ts"),
-        ),
-        materialize,
+        )
     )
-    tf = _materialize(
+    tf = _persist(
         base.select("_id", F.explode("_ts").alias("term"))
         .groupBy("_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf")),
-        materialize,
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
     n_docs = base.agg(F.count(F.lit(1)).alias("_n"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
@@ -3514,7 +3504,6 @@ def zipf_report(
     df: DataFrame,
     text_col: str = "text",
     top_ranks: int = 1000,
-    materialize: str = "persist",
 ) -> DataFrame:
     """One-row corpus lexical data card: vocabulary size, type/token
     ratio, hapax fraction, and the Zipf slope — the corpus-naturalness
@@ -3539,27 +3528,27 @@ def zipf_report(
     the ``top_ranks``-row head — slope = (n·Σxy − ΣxΣy) /
     (n·Σx² − (Σx)²) computed as one aggregate, no fitting loop.
 
-    Scale shape: the shuffle carries (token, count), materialized
-    once (``materialize`` forwards to :func:`~dfsql_spark.operators.
-    dedup._materialize`; release via ``release_persists`` — the
-    sibling tfidf/source_overlap contract) because the stats aggregate
-    and the head both read it; the rank window runs over the
+    Scale shape: the shuffle carries (token, count), pinned once
+    (:func:`~dfsql_spark.operators.dedup._persist`) because the stats
+    aggregate and the head both read it; the rank window runs over the
     ``top_ranks`` head only (a count-ordered TakeOrdered-sized subset,
-    never the vocabulary); output is ONE row.
+    never the vocabulary); output is ONE row.  The pin outlives the
+    call: release it with
+    :func:`~dfsql_spark.operators.dedup.release_persists` once the
+    report is consumed.
     """
     if top_ranks < 2:
         raise ValueError(f"top_ranks must be >= 2, got {top_ranks}")
     from pyspark.sql.window import Window
 
-    from .dedup import _materialize
+    from .dedup import _persist
 
-    counts = _materialize(
+    counts = _persist(
         df.select(
             F.explode(ws_tokens(text_col, lower=True)).alias("_tok")
         )
         .groupBy("_tok")
-        .agg(F.count(F.lit(1)).alias("_n")),
-        materialize,
+        .agg(F.count(F.lit(1)).alias("_n"))
     )
     stats = counts.agg(
         F.sum("_n").alias("n_tokens"),

@@ -39,6 +39,10 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # ORDER BY ... LIMIT n plans a top-k buffer of 2n slots; from one
+    # million rows on, plan a spilling Sort + GlobalLimit instead, so a
+    # huge LIMIT cannot take the JVM down
+    "spark.sql.execution.topKSortFallbackThreshold": "1000000",
     # Arrow for pandas interchange (sql_query / .sql accessor path)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # parquet: keep naive timestamps naive (match DuckDB oracle)

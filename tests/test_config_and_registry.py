@@ -340,3 +340,23 @@ def test_builtin_shadow_cannot_break_dataframe_api(spark):
     )
     out = lang_id(docs).collect()
     assert out[0].lang_pred == "en"
+
+
+# ---------------------------------------------------------------------------
+# top-k sort fallback (session.DEFAULT_CONFS)
+# ---------------------------------------------------------------------------
+
+def test_huge_order_by_limit_plans_spilling_sort(ds):
+    """``ORDER BY ... LIMIT n`` plans a top-k buffer of 2n slots, which
+    takes the JVM down for a huge ``n``.  From one million rows on the
+    session default plans a spilling Sort + GlobalLimit instead and
+    still returns every row in order; a small limit keeps the top-k."""
+    huge = "SELECT name FROM people ORDER BY age LIMIT 2000000000"
+    plan = ds.query_df(huge)._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" not in plan, plan
+    assert ds.query(huge).tolist() == ["bob", "eve", "ann", "dee", "cal"]
+
+    small = "SELECT name FROM people ORDER BY age LIMIT 50"
+    plan = ds.query_df(small)._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan, plan
+    assert ds.query(small).tolist() == ["bob", "eve", "ann", "dee", "cal"]

@@ -3027,11 +3027,8 @@ def test_lm_score_plan_is_broadcast_only(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     train = docs.filter("source IN ('src0', 'src1')")
-    # materialize='persist' is the harness opt-in (library default is
-    # stateless 'none' per advisor r12); this test pins the PERSISTED
-    # plan shape, so opt in explicitly
     plan = (
-        lm_score(docs, train, materialize="persist")
+        lm_score(docs, train)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -3302,6 +3299,34 @@ def test_lm_score_empty_train_raises(spark):
     with _pytest.raises(ValueError, match="train_df has no tokens"):
         lm_score(docs, ws)
     assert len(_dedup._LIVE_PERSISTS) == n_before
+
+
+def test_lm_score_pins_one_table_until_released(spark):
+    """One call pins exactly one table (the unigram counts) and
+    ``release_persists()`` removes it from the cache manager again."""
+    import pandas as pd
+    from pyspark import StorageLevel
+
+    from dfsql_spark.operators import dedup as _dedup
+    from dfsql_spark.operators.text import lm_score
+
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["a b a", "b a c"]})
+    )
+    _dedup.release_persists()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cm.cachedData().size()
+
+    out = lm_score(docs, docs)
+    assert len(_dedup._LIVE_PERSISTS) == 1
+    assert cm.cachedData().size() == n_cached + 1
+    (uni,) = _dedup._LIVE_PERSISTS
+    assert out.count() == 2
+
+    assert _dedup.release_persists() == 1
+    assert _dedup._LIVE_PERSISTS == []
+    assert cm.cachedData().size() == n_cached
+    assert uni.storageLevel == StorageLevel.NONE
 
 
 def test_epoch_shuffle_deterministic_and_uniform(spark):
@@ -10602,8 +10627,6 @@ def test_pagerank_hand_pinned(spark):
         pagerank(cyc, max_iter=0)
     with _pt.raises(ValueError, match="tol"):
         pagerank(cyc, tol=0.0)
-    with _pt.raises(ValueError, match="materialize"):
-        pagerank(cyc, materialize="none")
     with _pt.raises(ValueError, match="empty"):
         pagerank(cyc.filter("src = 'missing'"))
 
