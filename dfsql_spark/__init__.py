@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import Configuration
-from .datasource import DataSource
+from .datasource import DataSource, fits_one_arrow_batch
 from .exceptions import (
     CommandException,
     DfsqlException,
@@ -27,7 +27,7 @@ from .exceptions import (
     SQLParsingException,
 )
 from .functions import AggregateFunction, CustomFunction
-from .session import get_spark
+from .session import activate, current_spark, get_spark, one_shot_session
 
 __version__ = "0.1.0"
 
@@ -71,10 +71,27 @@ def sql_query(
     ``ds_kwargs`` sets ``cache``: its views live for one query, and a
     pandas table is already in JVM memory, so a cache pin would only
     add a job.
+
+    When every table is a pandas frame, the query runs in a child
+    session cloned from ``spark``: it inherits the caller's runtime
+    confs, temp views and functions, and shares the SparkContext and
+    cache manager, but the one-shot views, functions and confs stay in
+    the child, so a caller's own view named like a keyword is left as
+    it is.  When every such frame also fits one Arrow batch
+    (:func:`~dfsql_spark.datasource.fits_one_arrow_batch`), the child
+    runs Spark's interpreted operators (:data:`session.INTERPRETED_CONFS`):
+    compiling a class for a query this small, with its literals
+    inlined, costs more than the query.  A Spark DataFrame input is
+    registered on its own session, as classic PySpark cannot rebind a
+    DataFrame to another session, so a call with one runs on
+    ``spark``, compiled.
+
+    Without ``spark=``, the active (else the default) session is used
+    as it is; a session is built only when none exists.
     """
     if not table_dfs:
         raise DfsqlException("At least one table must be provided")
-    spark = spark or get_spark()
+    spark = spark or current_spark()
     word_re = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
     sql_words = {w.lower() for w in word_re.findall(sql)}
     for name in table_dfs:
@@ -83,7 +100,17 @@ def sql_query(
             raise DfsqlException(
                 f"Table {name} is not used in the query"
             )
-    ds = DataSource(spark=spark, **{"cache": False, **(ds_kwargs or {})})
+    frames = table_dfs.values()
+    if all(isinstance(df, pd.DataFrame) for df in frames):
+        session = one_shot_session(
+            spark, interpreted=all(fits_one_arrow_batch(spark, df) for df in frames)
+        )
+    else:
+        session = spark
+    ds = DataSource(spark=session, **{"cache": False, **(ds_kwargs or {})})
+    if session is not spark:
+        # set once, so the query never toggles it (DataSource._sql)
+        session.conf.set("spark.sql.caseSensitive", str(ds.case_sensitive).lower())
     registered = []
     try:
         for fname, fn in (custom_functions or {}).items():
@@ -97,8 +124,12 @@ def sql_query(
             registered.append(name)
         return ds.query(sql, reduce_output=reduce_output)
     finally:
+        if session is not spark:
+            activate(spark)
+        # dropping a view also unpins it from the shared cache manager
+        # when ds_kwargs asked for a cache
         for name in registered:
-            spark.catalog.dropTempView(name)
+            session.catalog.dropTempView(name)
         ds.function_registry.drop_all()
 
 

@@ -31,7 +31,7 @@ from .exceptions import (
     SQLParsingException,
 )
 from .functions.registry import FunctionRegistry
-from .session import get_spark
+from .session import current_spark
 from .sources.tables import TableInfo, read_file
 
 METADATA_FILE = "datasource_tables.json"
@@ -63,7 +63,9 @@ class DataSource:
 
     Parameters
     ----------
-    spark : optional existing SparkSession (one is built if omitted)
+    spark : optional SparkSession; when omitted, the active (else the
+        default) session is used as it is, and one is built only when
+        none exists
     metadata_dir : optional directory for JSON catalog persistence
         (reference: base_data_source.py:118-146)
     case_sensitive : column/table lookup case sensitivity
@@ -84,7 +86,7 @@ class DataSource:
         from .cache import DoNothingCache, MemoryCache
         from .config import Configuration
 
-        self.spark = spark or get_spark()
+        self.spark = spark or current_spark()
         self.metadata_dir = metadata_dir
         if cache is True:
             self.cache = MemoryCache()
@@ -158,10 +160,7 @@ class DataSource:
         Larger frames, and any frame when the batch size is unlimited
         (``<= 0``), keep the partitions ``createDataFrame`` gives them."""
         if isinstance(df, pd.DataFrame):
-            per_batch = int(
-                self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-            )
-            small = len(df) <= per_batch
+            small = fits_one_arrow_batch(self.spark, df)
             df = self.spark.createDataFrame(df)
             if small:
                 df = df.coalesce(1)
@@ -311,12 +310,14 @@ class DataSource:
         # eagerly, so name resolution happens inside the set/restore
         # window and the session-global conf is left untouched.  The
         # lock keeps concurrent DataSources (sharing one session) from
-        # analyzing under each other's sensitivity.
+        # analyzing under each other's sensitivity.  When the session
+        # already has this DataSource's sensitivity, the conf is not
+        # written at all, but analysis still runs under the lock.
+        want = str(self.case_sensitive).lower()
         with _CASE_SENSITIVITY_LOCK:
             prev = self.spark.conf.get("spark.sql.caseSensitive")
-            self.spark.conf.set(
-                "spark.sql.caseSensitive", str(self.case_sensitive).lower()
-            )
+            if prev != want:
+                self.spark.conf.set("spark.sql.caseSensitive", want)
             try:
                 out = self.spark.sql(
                     rewrite(sql, self.function_registry.name_map())
@@ -326,7 +327,8 @@ class DataSource:
             except AnalysisException as e:
                 raise QueryExecutionException(str(e).split("\n")[0]) from e
             finally:
-                self.spark.conf.set("spark.sql.caseSensitive", prev)
+                if prev != want:
+                    self.spark.conf.set("spark.sql.caseSensitive", prev)
         self._touch_referenced(sql)
         return out
 
@@ -381,6 +383,15 @@ class DataSource:
         if reduce_output:
             return _reduce_output(pdf)
         return pdf
+
+
+def fits_one_arrow_batch(spark: SparkSession, pdf: pd.DataFrame) -> bool:
+    """True when ``pdf`` has at most one Arrow batch of rows
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``).  Such a frame
+    is one partition (:meth:`DataSource.add_table`), and a one-shot
+    query over such frames runs interpreted (``sql_query``)."""
+    per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return len(pdf) <= per_batch
 
 
 def _path_size_bytes(path: str) -> int | None:

@@ -170,10 +170,12 @@ try:
             # may say "FROM temp" explicitly), so it cannot be made
             # unique per call.  The lock serializes register→analyze→
             # drop within this process so two threads' accessor calls
-            # can't read each other's data; a pre-existing USER view of
-            # the same name is replaced and then dropped — the same
-            # clobber the pandas accessor / sql_query path has always
-            # had (the name is reserved by the API, documented).
+            # can't read each other's data.  A pre-existing USER view of
+            # the same name is replaced and then dropped: the Spark
+            # DataFrame is registered on its own session, which classic
+            # PySpark cannot rebind to a child session.  (The pandas
+            # accessor registers in a one-shot child session through
+            # sql_query and leaves the caller's views alone.)
             with _ACCESSOR_VIEW_LOCK:
                 ds.add_table(from_table, sdf)
                 try:

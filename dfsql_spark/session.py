@@ -24,9 +24,17 @@ from __future__ import annotations
 
 import os
 
+from pyspark import RDD
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "configure", "DEFAULT_CONFS"]
+__all__ = [
+    "get_spark",
+    "current_spark",
+    "configure",
+    "DEFAULT_CONFS",
+    "INTERPRETED_CONFS",
+]
 
 # Confs that define the engine's dialect + scale posture. Anything the
 # caller already set on an active session is left untouched.
@@ -47,6 +55,17 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # parquet: keep naive timestamps naive (match DuckDB oracle)
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+}
+
+# Runtime confs under which a query runs Spark's interpreted operators:
+# no whole-stage codegen, and no generated projections or predicates.
+# Catalyst inlines literals into generated source, so a compiled query
+# compiles (and the JVM JIT-compiles) fresh classes for every new
+# literal.  ``factoryMode`` is an internal conf; tests/test_one_shot.py
+# pins that Spark honours it.
+INTERPRETED_CONFS: dict[str, str] = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
 }
 
 
@@ -103,6 +122,46 @@ def get_spark(app_name: str = "dfsql-spark", master: str | None = None) -> Spark
     )
     spark = builder.getOrCreate()
     return spark
+
+
+def current_spark() -> SparkSession:
+    """The caller's session as it is: the active session, else the
+    default one.  Only when neither exists is one built with
+    :func:`get_spark`, whose ``builder.getOrCreate()`` would re-apply
+    every builder conf to a live session and so undo the caller's own
+    runtime confs.  A :func:`one_shot_session` child that another
+    thread's ``sql_query`` has made active for a moment resolves to the
+    session it was cloned from."""
+    try:
+        spark = SparkSession.active()
+    except PySparkRuntimeError:
+        return get_spark()
+    return getattr(spark, "_one_shot_parent", spark)
+
+
+def one_shot_session(spark: SparkSession, interpreted: bool) -> SparkSession:
+    """A child session cloned from ``spark`` for one ``sql_query`` call:
+    it inherits runtime confs, temp views and functions, and shares the
+    SparkContext and cache manager.  ``interpreted`` sets
+    :data:`INTERPRETED_CONFS` on the child only."""
+    to_df = RDD.toDF
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    RDD.toDF = to_df  # the constructor rebinds rdd.toDF() to the new session
+    child._one_shot_parent = spark
+    if interpreted:
+        for key, value in INTERPRETED_CONFS.items():
+            child.conf.set(key, value)
+    return child
+
+
+def activate(spark: SparkSession) -> None:
+    """Make ``spark`` the active session, as ``createDataFrame`` does.
+    A one-shot child's ``createDataFrame`` makes the child active; left
+    so, it would pass its confs on to the next call."""
+    SparkSession._activeSession = spark
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(
+        spark._jsparkSession
+    )
 
 
 def configure(spark: SparkSession) -> SparkSession:

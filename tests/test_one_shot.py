@@ -3,9 +3,12 @@ and the pandas ``.sql`` accessor).
 
 A one-shot query registers throwaway views, so it does not pin them in
 Spark's cache, and a pandas frame of up to one Arrow batch is a single
-partition, so GROUP BY / HAVING / ORDER BY over it plan no exchange.  These tests count Spark jobs and tasks with
-``setJobGroup`` + ``statusTracker()``, so a plan regression fails here
-instead of hiding in wall-clock noise.
+partition, so GROUP BY / HAVING / ORDER BY over it plan no exchange.
+Over such frames the query runs interpreted in a child session, so it
+compiles no class.  These tests count Spark jobs and tasks with
+``setJobGroup`` + ``statusTracker()``, and Janino compiles with Spark's
+``CodegenMetrics``, so a plan regression fails here instead of hiding
+in wall-clock noise.
 """
 
 from __future__ import annotations
@@ -15,9 +18,13 @@ import itertools
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import RDD
+from pyspark.sql import SparkSession
 from pyspark.sql.catalog import Catalog
+from pyspark.sql.conf import RuntimeConfig
 
-from dfsql_spark import DataSource, sql_query
+from dfsql_spark import AggregateFunction, DataSource, QueryExecutionException, sql_query
+from dfsql_spark.session import INTERPRETED_CONFS, activate, current_spark, one_shot_session
 
 MAX_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 _GROUPS = itertools.count()
@@ -198,3 +205,246 @@ def test_one_shot_drops_custom_functions(spark, people):
             custom_functions={"inc": lambda s: s + 1.0},
         )
     assert count() == before
+
+
+# --- interpreted execution in a child session -------------------------
+
+_LITERALS = itertools.count(21)
+
+
+@pytest.fixture(scope="module")
+def named(people):
+    """``people`` plus the ``name`` column the LIKE shapes read."""
+    return people.assign(name=[f"user_{i}_{i * 7 % 1000}" for i in people["id"]])
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (driver and local executors)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _fresh_literal_shapes(frame):
+    """One-shot GROUP BY/HAVING, LIKE and CAST calls, each with a literal
+    this JVM has not seen yet."""
+    k = next(_LITERALS)
+    return [
+        lambda: sql_query(
+            f"SELECT grp, COUNT(*) AS n, SUM(age) AS s FROM t WHERE age > {k % 50 + 18} "
+            f"GROUP BY grp HAVING COUNT(*) > {k}",
+            t=frame,
+        ),
+        lambda: sql_query(
+            f"SELECT grp, COUNT(*) AS n FROM t WHERE name LIKE 'user_[0-9]*{k}_' GROUP BY grp",
+            t=frame,
+        ),
+        lambda: sql_query(
+            f"SELECT id, CAST(age AS str) AS a, CAST(score AS int) AS s FROM t WHERE id < {k}",
+            t=frame,
+        ),
+    ]
+
+
+def test_one_batch_one_shots_compile_no_class(spark, named, batch_rows):
+    for run in _fresh_literal_shapes(named):  # first-use set-up compiles
+        run()
+    before = _compiles(spark)
+    for _ in range(2):
+        for run in _fresh_literal_shapes(named):
+            run()
+    assert _compiles(spark) == before
+    # one row above the caller's batch size: compiled, as before
+    batch_rows(len(named) - 1)
+    before = _compiles(spark)
+    for run in _fresh_literal_shapes(named):
+        run()
+    assert _compiles(spark) > before
+
+
+class Spread(AggregateFunction):
+    name = "spread"
+
+    def get_output(self, args):
+        return float(args[0].max() - args[0].min())
+
+
+def _bonus(s):
+    return s * 2.0 + 1.0
+
+
+# each interactive_pandas shape, plus an aggregate custom function;
+# ``FROM temp`` shapes go through the pandas accessor without the FROM
+_SHAPES = {
+    "filter_project": "SELECT id, name, score FROM t WHERE age > 37 AND grp = 'b'",
+    "groupby_having": (
+        "SELECT grp, COUNT(*) AS n, SUM(age) AS total_age, AVG(score) AS mean_score "
+        "FROM t GROUP BY grp HAVING COUNT(*) > 190"
+    ),
+    "join": (
+        "SELECT u.region, COUNT(*) AS n, SUM(t.score * u.weight) AS w "
+        "FROM t JOIN u ON t.grp = u.grp WHERE t.age < 44 GROUP BY u.region"
+    ),
+    "scalar": "SELECT MAX(score) AS top FROM t WHERE grp = 'c' AND age >= 30",
+    "series_accessor": "SELECT name FROM temp WHERE age = 40",
+    "groupby_accessor": (
+        "SELECT grp, MIN(age) AS lo, MAX(age) AS hi, COUNT(*) AS n "
+        "FROM temp WHERE score < 61.5 GROUP BY grp"
+    ),
+    "like_regex": "SELECT grp, COUNT(*) AS n FROM t WHERE name LIKE 'user_[0-9]*3_' GROUP BY grp",
+    "power": "SELECT id, age ^ 2 AS age_sq, 2 ^ 3 ^ 2 AS p FROM temp WHERE id % 97 = 0",
+    "cast": "SELECT id, CAST(age AS str) AS a, CAST(score AS int) AS s FROM t WHERE id < 120",
+    "custom_function": "SELECT id, bonus(score) AS b FROM t WHERE grp = 'a' AND age > 50",
+    "aggregate_function": "SELECT grp, spread(score) AS sp FROM t GROUP BY grp",
+}
+_GROUPS_FRAME = pd.DataFrame(
+    {"grp": list("abcde"), "region": list("nnsse"), "weight": [3, 1, 4, 1, 5]}
+)
+_FUNCTIONS = {"bonus": _bonus, "spread": Spread()}
+
+
+@pytest.fixture(scope="module")
+def compiled(spark, named):
+    """A long-lived DataSource on the caller's (compiled) session."""
+    ds = DataSource(spark=spark, cache=False)
+    for name, fn in _FUNCTIONS.items():
+        ds.register_function(name, fn)
+    for name, frame in (("t", named), ("temp", named), ("u", _GROUPS_FRAME)):
+        ds.add_table(name, frame)
+    yield ds
+    for name in ("t", "temp", "u"):
+        ds.drop_table(name)
+    ds.function_registry.drop_all()
+
+
+def _sorted(out):
+    frame = out.to_frame() if isinstance(out, pd.Series) else out
+    return frame.sort_values(list(frame.columns)).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("shape", list(_SHAPES))
+def test_interpreted_one_shot_matches_compiled(compiled, named, shape):
+    sql = _SHAPES[shape]
+    expected = compiled.query(sql)
+    if " FROM temp " in sql:
+        got = named.sql(sql.replace(" FROM temp ", " "))
+    elif " JOIN u " in sql:
+        got = sql_query(sql, t=named, u=_GROUPS_FRAME)
+    else:
+        got = sql_query(sql, t=named, custom_functions=_FUNCTIONS)
+    if np.isscalar(expected):
+        assert got == pytest.approx(expected)
+    else:
+        pd.testing.assert_frame_equal(_sorted(got), _sorted(expected), check_dtype=False)
+
+
+@pytest.fixture()
+def caller_view_t(spark):
+    """The caller's own view ``t``, with data unlike any one-shot input."""
+    spark.createDataFrame(pd.DataFrame({"id": [-1, -2]})).createOrReplaceTempView("t")
+    yield
+    spark.catalog.dropTempView("t")
+
+
+@pytest.fixture()
+def caller_ansi(spark):
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    yield
+    spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+@pytest.mark.parametrize("fails", [False, True], ids=["success", "failure"])
+def test_one_shot_leaves_caller_session_alone(
+    spark, people, batch_rows, caller_view_t, caller_ansi, fails
+):
+    codegen = {key: spark.conf.get(key) for key in INTERPRETED_CONFS}
+    to_df = RDD.toDF  # bound to a session by each SparkSession constructor
+    batch_rows(100)
+    if fails:
+        # the caller's ANSI mode applies inside the call
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            sql_query("SELECT id / 0 AS x FROM t", t=people)
+    else:
+        # the caller's batch size applies inside the call
+        largest = sql_query(
+            "SELECT MAX(batch_rows(id)) AS n FROM t",
+            t=people,
+            custom_functions={"batch_rows": lambda s: s * 0 + len(s)},
+        )
+        assert largest == 100
+    assert SparkSession.getActiveSession() is spark
+    assert {key: spark.conf.get(key) for key in INTERPRETED_CONFS} == codegen
+    assert spark.table("t").toPandas()["id"].tolist() == [-1, -2]
+    assert RDD.toDF is to_df
+
+
+def test_one_shot_analysis_error_leaves_caller_session_alone(spark, people, caller_view_t):
+    with pytest.raises(QueryExecutionException):
+        sql_query("SELECT no_such_column FROM t", t=people)
+    assert SparkSession.getActiveSession() is spark
+    assert spark.table("t").toPandas()["id"].tolist() == [-1, -2]
+
+
+def test_leaked_child_session_resolves_to_its_parent(spark):
+    child = one_shot_session(spark, interpreted=True)
+    activate(child)
+    try:
+        assert current_spark() is spark
+    finally:
+        activate(spark)
+
+
+@pytest.fixture()
+def user_confs(spark):
+    """Runtime confs a user set, unlike every get_spark() builder conf."""
+    confs = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.ansi.enabled": "true",
+    }
+    prev = {key: spark.conf.get(key) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    yield confs
+    for key, value in prev.items():
+        spark.conf.set(key, value)
+
+
+def test_runtime_confs_survive_one_shot_and_datasource(spark, people, user_confs):
+    assert sql_query("SELECT COUNT(*) AS n FROM t", t=people) == len(people)
+    assert people.sql("SELECT MAX(age) AS hi") == people["age"].max()
+    assert DataSource().spark is spark
+    assert {key: spark.conf.get(key) for key in user_confs} == user_confs
+
+
+@pytest.fixture()
+def conf_writes(spark, monkeypatch):
+    """(written on the caller's session?, key) for every conf write."""
+    writes = []
+    real = RuntimeConfig.set
+
+    def record(self, key, value):
+        writes.append((self is spark.conf, key))
+        return real(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    return writes
+
+
+def test_matching_case_sensitivity_writes_no_conf(spark, people, conf_writes):
+    session_value = spark.conf.get("spark.sql.caseSensitive") == "true"
+    ds = DataSource(spark=spark, cache=False, case_sensitive=session_value)
+    ds.add_table("cs_match", people)
+    try:
+        assert ds.query("SELECT COUNT(*) AS n FROM cs_match") == len(people)
+    finally:
+        ds.drop_table("cs_match")
+    assert conf_writes == []
+    # a one-shot call sets its sensitivity once, on the child only
+    for case_sensitive in (True, False):
+        conf_writes.clear()
+        sql_query("SELECT COUNT(*) AS n FROM t", t=people, ds_kwargs={"case_sensitive": case_sensitive})
+        assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == [
+            (False, "spark.sql.caseSensitive")
+        ]
+        assert not any(on_caller for on_caller, _ in conf_writes)
