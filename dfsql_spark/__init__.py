@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import Configuration
-from .datasource import DataSource, fits_one_arrow_batch
+from .datasource import DataSource
 from .exceptions import (
     CommandException,
     DfsqlException,
@@ -27,7 +27,13 @@ from .exceptions import (
     SQLParsingException,
 )
 from .functions import AggregateFunction, CustomFunction
-from .session import activate, current_spark, get_spark, one_shot_session
+from .session import (
+    INTERPRETED_MAX_ROWS,
+    activate,
+    current_spark,
+    get_spark,
+    one_shot_session,
+)
 
 __version__ = "0.1.0"
 
@@ -77,11 +83,11 @@ def sql_query(
     confs, temp views and functions, and shares the SparkContext and
     cache manager, but the one-shot views, functions and confs stay in
     the child, so a caller's own view named like a keyword is left as
-    it is.  When every such frame also fits one Arrow batch
-    (:func:`~dfsql_spark.datasource.fits_one_arrow_batch`), the child
-    runs Spark's interpreted operators (:data:`session.INTERPRETED_CONFS`):
-    compiling a class for a query this small, with its literals
-    inlined, costs more than the query.  A Spark DataFrame input is
+    it is.  When no frame has more than
+    :data:`session.INTERPRETED_MAX_ROWS` rows, the child runs Spark's
+    interpreted operators (:data:`session.INTERPRETED_CONFS`):
+    compiling classes for such a query, with its literals inlined,
+    costs more than interpreting it.  A Spark DataFrame input is
     registered on its own session, as classic PySpark cannot rebind a
     DataFrame to another session, so a call with one runs on
     ``spark``, compiled.
@@ -103,7 +109,7 @@ def sql_query(
     frames = table_dfs.values()
     if all(isinstance(df, pd.DataFrame) for df in frames):
         session = one_shot_session(
-            spark, interpreted=all(fits_one_arrow_batch(spark, df) for df in frames)
+            spark, interpreted=max(len(df) for df in frames) <= INTERPRETED_MAX_ROWS
         )
     else:
         session = spark

@@ -160,7 +160,10 @@ class DataSource:
         Larger frames, and any frame when the batch size is unlimited
         (``<= 0``), keep the partitions ``createDataFrame`` gives them."""
         if isinstance(df, pd.DataFrame):
-            small = fits_one_arrow_batch(self.spark, df)
+            per_batch = int(
+                self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+            )
+            small = len(df) <= per_batch
             df = self.spark.createDataFrame(df)
             if small:
                 df = df.coalesce(1)
@@ -383,15 +386,6 @@ class DataSource:
         if reduce_output:
             return _reduce_output(pdf)
         return pdf
-
-
-def fits_one_arrow_batch(spark: SparkSession, pdf: pd.DataFrame) -> bool:
-    """True when ``pdf`` has at most one Arrow batch of rows
-    (``spark.sql.execution.arrow.maxRecordsPerBatch``).  Such a frame
-    is one partition (:meth:`DataSource.add_table`), and a one-shot
-    query over such frames runs interpreted (``sql_query``)."""
-    per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    return len(pdf) <= per_batch
 
 
 def _path_size_bytes(path: str) -> int | None:

@@ -23,7 +23,9 @@ Scale knobs are environment-driven so the identical code runs on
 from __future__ import annotations
 
 import os
+import threading
 
+from py4j.protocol import Py4JError
 from pyspark import RDD
 from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
@@ -34,6 +36,7 @@ __all__ = [
     "configure",
     "DEFAULT_CONFS",
     "INTERPRETED_CONFS",
+    "INTERPRETED_MAX_ROWS",
 ]
 
 # Confs that define the engine's dialect + scale posture. Anything the
@@ -67,6 +70,13 @@ INTERPRETED_CONFS: dict[str, str] = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
 }
+
+# Largest pandas frame, in rows, that a one-shot query runs interpreted
+# over.  Interpreted operators pay per row what codegen pays per query:
+# over the benchmark's one-shot shapes they took 2% less CPU than
+# compiled ones at 100,000 rows, 4% more at 300,000 and 14% more at
+# 1,000,000 (README, "One-shot SQL over pandas").
+INTERPRETED_MAX_ROWS = 100_000
 
 
 def get_spark(app_name: str = "dfsql-spark", master: str | None = None) -> SparkSession:
@@ -139,14 +149,54 @@ def current_spark() -> SparkSession:
     return getattr(spark, "_one_shot_parent", spark)
 
 
+# PySpark's SparkSession constructor rebinds the process-global
+# ``RDD.toDF`` to the new session; saving, constructing and restoring
+# must not interleave between threads.  The lock also guards the
+# one-time pool set-up below.
+_CHILD_LOCK = threading.Lock()
+
+# Spark SQL's cached thread pools for AQE result stages, query-stage
+# creation and broadcasts start a new thread per submission until they
+# reach their cap.  Each thread inherits the session that was active
+# where it was started (for a one-shot call, the child) and keeps it
+# reachable while it idles, 60 s by default.  A one-second keep-alive
+# bounds that to about one second's worth of child sessions.
+_INHERITING_POOLS = (
+    "org.apache.spark.sql.execution.adaptive.ResultQueryStageExec$",
+    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec$",
+    "org.apache.spark.sql.execution.exchange.BroadcastExchangeExec$",
+)
+POOL_KEEP_ALIVE_S = 1
+_pools_bounded = False
+
+
+def _bound_pool_keep_alive(jvm) -> None:
+    """Set :data:`POOL_KEEP_ALIVE_S` on :data:`_INHERITING_POOLS`.  A
+    pool this Spark build does not have is skipped."""
+    seconds = jvm.java.util.concurrent.TimeUnit.SECONDS
+    for name in _INHERITING_POOLS:
+        try:
+            module = jvm.java.lang.Class.forName(name).getField("MODULE$").get(None)
+            pool = module.executionContext().executor()
+            pool.setKeepAliveTime(POOL_KEEP_ALIVE_S, seconds)
+        except Py4JError:
+            continue
+
+
 def one_shot_session(spark: SparkSession, interpreted: bool) -> SparkSession:
     """A child session cloned from ``spark`` for one ``sql_query`` call:
     it inherits runtime confs, temp views and functions, and shares the
     SparkContext and cache manager.  ``interpreted`` sets
     :data:`INTERPRETED_CONFS` on the child only."""
-    to_df = RDD.toDF
-    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    RDD.toDF = to_df  # the constructor rebinds rdd.toDF() to the new session
+    global _pools_bounded
+    jchild = spark._jsparkSession.cloneSession()
+    with _CHILD_LOCK:
+        if not _pools_bounded:
+            _bound_pool_keep_alive(spark._jvm)
+            _pools_bounded = True
+        to_df = RDD.toDF
+        child = SparkSession(spark.sparkContext, jchild)
+        RDD.toDF = to_df
     child._one_shot_parent = spark
     if interpreted:
         for key, value in INTERPRETED_CONFS.items():

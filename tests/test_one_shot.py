@@ -4,7 +4,8 @@ and the pandas ``.sql`` accessor).
 A one-shot query registers throwaway views, so it does not pin them in
 Spark's cache, and a pandas frame of up to one Arrow batch is a single
 partition, so GROUP BY / HAVING / ORDER BY over it plan no exchange.
-Over such frames the query runs interpreted in a child session, so it
+A query whose tables are all pandas frames of up to
+``INTERPRETED_MAX_ROWS`` rows runs interpreted in a child session, so it
 compiles no class.  These tests count Spark jobs and tasks with
 ``setJobGroup`` + ``statusTracker()``, and Janino compiles with Spark's
 ``CodegenMetrics``, so a plan regression fails here instead of hiding
@@ -13,18 +14,30 @@ in wall-clock noise.
 
 from __future__ import annotations
 
+import gc
 import itertools
+import threading
+import time
 
 import numpy as np
 import pandas as pd
+import pyspark.sql.session
 import pytest
 from pyspark import RDD
 from pyspark.sql import SparkSession
 from pyspark.sql.catalog import Catalog
 from pyspark.sql.conf import RuntimeConfig
 
+import dfsql_spark
 from dfsql_spark import AggregateFunction, DataSource, QueryExecutionException, sql_query
-from dfsql_spark.session import INTERPRETED_CONFS, activate, current_spark, one_shot_session
+from dfsql_spark.session import (
+    INTERPRETED_CONFS,
+    INTERPRETED_MAX_ROWS,
+    POOL_KEEP_ALIVE_S,
+    activate,
+    current_spark,
+    one_shot_session,
+)
 
 MAX_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 _GROUPS = itertools.count()
@@ -245,18 +258,23 @@ def _fresh_literal_shapes(frame):
     ]
 
 
-def test_one_batch_one_shots_compile_no_class(spark, named, batch_rows):
+def test_pandas_one_shots_compile_no_class(spark, named, batch_rows):
     for run in _fresh_literal_shapes(named):  # first-use set-up compiles
         run()
     before = _compiles(spark)
     for _ in range(2):
         for run in _fresh_literal_shapes(named):
             run()
-    assert _compiles(spark) == before
-    # one row above the caller's batch size: compiled, as before
-    batch_rows(len(named) - 1)
-    before = _compiles(spark)
+    # the rule does not depend on the Arrow batch size
+    batch_rows(len(named) // 3)
     for run in _fresh_literal_shapes(named):
+        run()
+    assert _compiles(spark) == before
+    # one row above INTERPRETED_MAX_ROWS: compiled, as before
+    rows = INTERPRETED_MAX_ROWS + 1
+    big = named.iloc[np.arange(rows) % len(named)].assign(id=np.arange(rows))
+    before = _compiles(spark)
+    for run in _fresh_literal_shapes(big):
         run()
     assert _compiles(spark) > before
 
@@ -392,6 +410,80 @@ def test_leaked_child_session_resolves_to_its_parent(spark):
         assert current_spark() is spark
     finally:
         activate(spark)
+
+
+def test_concurrent_one_shots_keep_rdd_to_df(spark, people, monkeypatch):
+    """Every child's constructor rebinds the process-global ``RDD.toDF``;
+    one-shots on two threads must leave it bound as it was."""
+    to_df = RDD.toDF
+    rebind = pyspark.sql.session._monkey_patch_RDD
+    calls = itertools.count()
+    first_in, second_in = threading.Event(), threading.Event()
+
+    def slow_rebind(session):
+        # hold the first child's binding until the second thread binds
+        # its own (it cannot while the first holds the lock), then let
+        # the first thread restore before the second
+        rebind(session)
+        k = next(calls)
+        if k == 0:
+            first_in.set()
+            second_in.wait(2)
+        elif k == 1:
+            second_in.set()
+            time.sleep(0.3)
+
+    monkeypatch.setattr(pyspark.sql.session, "_monkey_patch_RDD", slow_rebind)
+    errors = []
+
+    def loop(k):
+        try:
+            for i in range(3):
+                sql_query(f"SELECT COUNT(*) AS n FROM t WHERE id > {k * 10 + i}", t=people)
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    first = threading.Thread(target=loop, args=(0,))
+    first.start()
+    assert first_in.wait(60)
+    second = threading.Thread(target=loop, args=(1,))
+    second.start()
+    first.join()
+    second.join()
+    assert errors == []
+    assert RDD.toDF is to_df
+
+
+def test_child_sessions_are_freed_soon_after_the_call(spark, people, monkeypatch):
+    """Spark's AQE result-stage and broadcast pool threads inherit the
+    child active where they start; they must not keep it for long."""
+    jvm = spark._jvm
+    refs = []
+
+    def tracked(parent, interpreted):
+        child = one_shot_session(parent, interpreted)
+        refs.append(jvm.java.lang.ref.WeakReference(child._jsparkSession))
+        return child
+
+    monkeypatch.setattr(dfsql_spark, "one_shot_session", tracked)
+    groups = pd.DataFrame({"grp": list("abcde"), "w": range(5)})
+    for i in range(3):
+        sql_query(f"SELECT grp, COUNT(*) AS n FROM t WHERE age > {20 + i} GROUP BY grp", t=people)
+        sql_query(
+            f"SELECT u.w, COUNT(*) AS n FROM t JOIN u ON t.grp = u.grp WHERE t.age > {20 + i} "
+            "GROUP BY u.w",
+            t=people,
+            u=groups,
+        )
+    deadline = time.monotonic() + POOL_KEEP_ALIVE_S + 15
+    while True:
+        gc.collect()  # drop the Python wrappers, so py4j releases the JVM objects
+        jvm.java.lang.System.gc()
+        alive = sum(ref.get() is not None for ref in refs)
+        if alive == 0 or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert alive == 0
 
 
 @pytest.fixture()
