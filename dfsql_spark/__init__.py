@@ -27,13 +27,7 @@ from .exceptions import (
     SQLParsingException,
 )
 from .functions import AggregateFunction, CustomFunction
-from .session import (
-    INTERPRETED_MAX_ROWS,
-    activate,
-    current_spark,
-    get_spark,
-    one_shot_session,
-)
+from .session import activate, current_spark, get_spark, one_shot_session
 
 __version__ = "0.1.0"
 
@@ -83,14 +77,17 @@ def sql_query(
     confs, temp views and functions, and shares the SparkContext and
     cache manager, but the one-shot views, functions and confs stay in
     the child, so a caller's own view named like a keyword is left as
-    it is.  When no frame has more than
-    :data:`session.INTERPRETED_MAX_ROWS` rows, the child runs Spark's
-    interpreted operators (:data:`session.INTERPRETED_CONFS`):
-    compiling classes for such a query, with its literals inlined,
-    costs more than interpreting it.  A Spark DataFrame input is
-    registered on its own session, as classic PySpark cannot rebind a
-    DataFrame to another session, so a call with one runs on
-    ``spark``, compiled.
+    it is.  :meth:`DataSource.query` runs the query in that child and
+    picks its mode by the plan's leaf row counts
+    (:func:`session.runs_interpreted`): a pandas frame is a
+    ``LocalRelation`` with an exact count, so a query over frames of
+    up to :data:`session.INTERPRETED_MAX_ROWS` rows runs Spark's
+    interpreted operators (:data:`session.INTERPRETED_CONFS`), as
+    compiling classes for it, with its literals inlined, costs more
+    than interpreting it.  A Spark DataFrame input is registered on
+    its own session, as classic PySpark cannot rebind a DataFrame to
+    another session; :meth:`DataSource.query` then clones its child
+    from ``spark``, and applies the same leaf rule.
 
     Without ``spark=``, the active (else the default) session is used
     as it is; a session is built only when none exists.
@@ -106,17 +103,11 @@ def sql_query(
             raise DfsqlException(
                 f"Table {name} is not used in the query"
             )
-    frames = table_dfs.values()
-    if all(isinstance(df, pd.DataFrame) for df in frames):
-        session = one_shot_session(
-            spark, interpreted=max(len(df) for df in frames) <= INTERPRETED_MAX_ROWS
-        )
+    if all(isinstance(df, pd.DataFrame) for df in table_dfs.values()):
+        session = one_shot_session(spark)
     else:
         session = spark
     ds = DataSource(spark=session, **{"cache": False, **(ds_kwargs or {})})
-    if session is not spark:
-        # set once, so the query never toggles it (DataSource._sql)
-        session.conf.set("spark.sql.caseSensitive", str(ds.case_sensitive).lower())
     registered = []
     try:
         for fname, fn in (custom_functions or {}).items():

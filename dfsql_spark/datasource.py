@@ -31,18 +31,26 @@ from .exceptions import (
     SQLParsingException,
 )
 from .functions.registry import FunctionRegistry
-from .session import current_spark
+from .session import (
+    INTERPRETED_CONFS,
+    activate,
+    current_spark,
+    one_shot_session,
+    runs_interpreted,
+)
 from .sources.tables import TableInfo, read_file
 
 METADATA_FILE = "datasource_tables.json"
 
-# ``spark.sql.caseSensitive`` is session-global; the per-query
+# ``spark.sql.caseSensitive`` is session-global; ``query_df`` and the
+# commands analyze on the DataSource's own session, so their per-query
 # set/analyze/restore window in ``_sql`` must not interleave across
 # threads, or a query can analyze under another DataSource's
 # sensitivity (and restore a stale value).  One process-wide lock:
 # sessions are a process-level resource and the guarded window is only
-# parse+analyze (execution happens outside it), so contention is
-# negligible next to query runtime.
+# parse+analyze (execution happens outside it).  ``query()`` takes no
+# lock: it analyzes in a per-query child session that carries its own
+# sensitivity.
 _CASE_SENSITIVITY_LOCK = threading.Lock()
 
 
@@ -307,8 +315,6 @@ class DataSource:
         (dfsql/table.py:29-34, wired at base_data_source.py:76-79).
         ``cacheTable`` only *marks* the plan; no job runs here.
         """
-        from pyspark.errors import AnalysisException, ParseException
-
         # Scope case sensitivity to this query: spark.sql analyzes
         # eagerly, so name resolution happens inside the set/restore
         # window and the session-global conf is left untouched.  The
@@ -322,18 +328,22 @@ class DataSource:
             if prev != want:
                 self.spark.conf.set("spark.sql.caseSensitive", want)
             try:
-                out = self.spark.sql(
-                    rewrite(sql, self.function_registry.name_map())
-                )
-            except ParseException as e:
-                raise SQLParsingException(str(e).split("\n")[0]) from e
-            except AnalysisException as e:
-                raise QueryExecutionException(str(e).split("\n")[0]) from e
+                out = self._analyze(self.spark, sql)
             finally:
                 if prev != want:
                     self.spark.conf.set("spark.sql.caseSensitive", prev)
         self._touch_referenced(sql)
         return out
+
+    def _analyze(self, spark: SparkSession, sql: str) -> DataFrame:
+        from pyspark.errors import AnalysisException, ParseException
+
+        try:
+            return spark.sql(rewrite(sql, self.function_registry.name_map()))
+        except ParseException as e:
+            raise SQLParsingException(str(e).split("\n")[0]) from e
+        except AnalysisException as e:
+            raise QueryExecutionException(str(e).split("\n")[0]) from e
 
     def _touch_referenced(self, sql: str) -> None:
         """Mark every registered table named in ``sql`` as used, driving
@@ -373,6 +383,21 @@ class DataSource:
         Series when ``reduce_output`` (reference:
         base_data_source.py:455-460).
 
+        A SELECT runs in a child session cloned from the DataSource's
+        (:func:`session.one_shot_session`), or in the session itself
+        when that already is such a child (``sql_query``).  The child
+        inherits runtime confs, temp views and functions, and shares
+        the cache manager; this DataSource's case sensitivity is set on
+        the child, so the query takes no lock and writes no conf of the
+        DataSource's session.  When every leaf of the plan has a known
+        row count of at most :data:`session.INTERPRETED_MAX_ROWS`
+        (:func:`session.runs_interpreted`: a pandas table, or a cached
+        table after its first scan), the child runs Spark's
+        interpreted operators, so fresh literals compile no classes.
+        File scans, a cached table's first scan, :meth:`query_df` and
+        the commands run compiled.  The session that was active before
+        the call is active again after it, also after an error.
+
         This is the *API boundary only* — all computation has already
         happened distributed; only the final (small) result crosses to
         the driver.  For large results use :meth:`query_df`.
@@ -380,8 +405,22 @@ class DataSource:
         cmd = try_parse_command(sql)
         if cmd is not None:
             return self._execute_command(cmd)
-        result = self._sql(sql)
-        pdf = result.toPandas()
+        active = SparkSession._activeSession
+        try:
+            if hasattr(self.spark, "_one_shot_parent"):
+                session = self.spark
+            else:
+                session = one_shot_session(self.spark)
+            session.conf.set("spark.sql.caseSensitive", str(self.case_sensitive).lower())
+            result = self._analyze(session, sql)
+            self._touch_referenced(sql)
+            if runs_interpreted(result):
+                for key, value in INTERPRETED_CONFS.items():
+                    session.conf.set(key, value)
+            pdf = result.toPandas()
+        finally:
+            if active is not None:
+                activate(active)
         pdf.columns = [_clean_name(c) for c in pdf.columns]
         if reduce_output:
             return _reduce_output(pdf)

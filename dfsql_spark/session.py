@@ -28,7 +28,7 @@ import threading
 from py4j.protocol import Py4JError
 from pyspark import RDD
 from pyspark.errors import PySparkRuntimeError
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "get_spark",
@@ -71,12 +71,18 @@ INTERPRETED_CONFS: dict[str, str] = {
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
 }
 
-# Largest pandas frame, in rows, that a one-shot query runs interpreted
-# over.  Interpreted operators pay per row what codegen pays per query:
-# over the benchmark's one-shot shapes they took 2% less CPU than
-# compiled ones at 100,000 rows, 4% more at 300,000 and 14% more at
-# 1,000,000 (README, "One-shot SQL over pandas").
-INTERPRETED_MAX_ROWS = 100_000
+# Largest leaf, in rows, of a plan that runs interpreted (see
+# ``runs_interpreted``).  Interpreted operators pay per row what codegen
+# pays per query.  Probed with fresh literals, one JVM alternating the
+# two modes (``local[4]``, 4 vCPU VM), the median CPU of a block of
+# queries, interpreted against compiled, was: over cached parquet
+# tables (GROUP BY, joins, point lookups, IN subqueries), 1.77 s against
+# 2.36 s at 150,000 rows, 1.38 s against 1.68 s at 600,000 and 9.6 s
+# against 5.7 s at 6,000,000; over pandas frames (filter, GROUP BY/
+# HAVING, join, CAST), 4.53 s against 4.80 s at 200,000 rows and
+# 12.97 s against 13.08 s at 600,000.  600,000 is the largest probed
+# size at which interpreted was not dearer on either path.
+INTERPRETED_MAX_ROWS = 600_000
 
 
 def get_spark(app_name: str = "dfsql-spark", master: str | None = None) -> SparkSession:
@@ -183,11 +189,11 @@ def _bound_pool_keep_alive(jvm) -> None:
             continue
 
 
-def one_shot_session(spark: SparkSession, interpreted: bool) -> SparkSession:
-    """A child session cloned from ``spark`` for one ``sql_query`` call:
-    it inherits runtime confs, temp views and functions, and shares the
-    SparkContext and cache manager.  ``interpreted`` sets
-    :data:`INTERPRETED_CONFS` on the child only."""
+def one_shot_session(spark: SparkSession) -> SparkSession:
+    """A child session cloned from ``spark`` for one query: it inherits
+    runtime confs, temp views and functions, and shares the
+    SparkContext and cache manager, so confs set on it (case
+    sensitivity, :data:`INTERPRETED_CONFS`) stay off ``spark``."""
     global _pools_bounded
     jchild = spark._jsparkSession.cloneSession()
     with _CHILD_LOCK:
@@ -198,10 +204,33 @@ def one_shot_session(spark: SparkSession, interpreted: bool) -> SparkSession:
         child = SparkSession(spark.sparkContext, jchild)
         RDD.toDF = to_df
     child._one_shot_parent = spark
-    if interpreted:
-        for key, value in INTERPRETED_CONFS.items():
-            child.conf.set(key, value)
     return child
+
+
+def _scala_items(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def runs_interpreted(df: DataFrame) -> bool:
+    """Whether ``df`` should run under :data:`INTERPRETED_CONFS`: every
+    leaf of its plan with cached data substituted, subqueries included,
+    has a known row count, and none has more than
+    :data:`INTERPRETED_MAX_ROWS` rows.  A pandas frame is a
+    ``LocalRelation`` and a cached table scanned once is an
+    ``InMemoryRelation``, both with exact counts; a file scan, and a
+    cached table before its first scan, have none.  It reads the
+    analyzed plan only, so the caller can still set the confs before
+    the optimizer runs (``ConvertToLocalRelation`` evaluates filters
+    over a ``LocalRelation`` through generated predicates)."""
+    plan = df._jdf.queryExecution().withCachedData()
+    for tree in (plan, *_scala_items(plan.subqueriesAll())):
+        for leaf in _scala_items(tree.collectLeaves()):
+            rows = leaf.stats().rowCount()
+            if not rows.isDefined() or rows.get() > INTERPRETED_MAX_ROWS:
+                return False
+    return True
 
 
 def activate(spark: SparkSession) -> None:

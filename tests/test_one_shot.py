@@ -1,15 +1,16 @@
 """Plan-shape pins for the one-shot SQL-over-pandas path (``sql_query``
-and the pandas ``.sql`` accessor).
+and the pandas ``.sql`` accessor) and ``DataSource.query``.
 
 A one-shot query registers throwaway views, so it does not pin them in
 Spark's cache, and a pandas frame of up to one Arrow batch is a single
 partition, so GROUP BY / HAVING / ORDER BY over it plan no exchange.
-A query whose tables are all pandas frames of up to
-``INTERPRETED_MAX_ROWS`` rows runs interpreted in a child session, so it
-compiles no class.  These tests count Spark jobs and tasks with
-``setJobGroup`` + ``statusTracker()``, and Janino compiles with Spark's
-``CodegenMetrics``, so a plan regression fails here instead of hiding
-in wall-clock noise.
+``DataSource.query`` runs each SELECT in a per-query child session,
+interpreted when every leaf of its plan has a known row count of at
+most ``INTERPRETED_MAX_ROWS`` (a pandas frame, or a cached table after
+its first scan), so it compiles no class.  These tests count Spark
+jobs and tasks with ``setJobGroup`` + ``statusTracker()``, and Janino
+compiles with Spark's ``CodegenMetrics``, so a plan regression fails
+here instead of hiding in wall-clock noise.
 """
 
 from __future__ import annotations
@@ -18,9 +19,12 @@ import gc
 import itertools
 import threading
 import time
+from decimal import Decimal
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.session
 import pytest
 from pyspark import RDD
@@ -30,6 +34,7 @@ from pyspark.sql.conf import RuntimeConfig
 
 import dfsql_spark
 from dfsql_spark import AggregateFunction, DataSource, QueryExecutionException, sql_query
+from dfsql_spark.datasource import _clean_name, _reduce_output
 from dfsql_spark.session import (
     INTERPRETED_CONFS,
     INTERPRETED_MAX_ROWS,
@@ -37,6 +42,7 @@ from dfsql_spark.session import (
     activate,
     current_spark,
     one_shot_session,
+    runs_interpreted,
 )
 
 MAX_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -339,20 +345,219 @@ def _sorted(out):
     return frame.sort_values(list(frame.columns)).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("shape", list(_SHAPES))
-def test_interpreted_one_shot_matches_compiled(compiled, named, shape):
-    sql = _SHAPES[shape]
-    expected = compiled.query(sql)
-    if " FROM temp " in sql:
-        got = named.sql(sql.replace(" FROM temp ", " "))
-    elif " JOIN u " in sql:
-        got = sql_query(sql, t=named, u=_GROUPS_FRAME)
+def _query_compiled(ds, sql):
+    """``ds.query(sql)`` as ``query_df`` runs it: compiled, on the
+    DataSource's own session."""
+    pdf = ds.query_df(sql).toPandas()
+    pdf.columns = [_clean_name(c) for c in pdf.columns]
+    return _reduce_output(pdf)
+
+
+@pytest.fixture(scope="module")
+def catalog_files(tmp_path_factory):
+    """Small orders / customer / nation parquet tables; ``o_totalprice``
+    is a DECIMAL(12,2)."""
+    rng = np.random.default_rng(11)
+    root = tmp_path_factory.mktemp("catalog")
+    n_orders, n_cust = 4_000, 400
+    cents = rng.integers(100, 5_000_000, n_orders)
+    frames = {
+        "orders": pd.DataFrame(
+            {
+                "o_orderkey": np.arange(1, n_orders + 1, dtype="int64"),
+                "o_custkey": rng.integers(1, n_cust + 1, n_orders),
+                "o_totalprice": [Decimal(int(c)).scaleb(-2) for c in cents],
+                "o_weight": rng.uniform(0.0, 10.0, n_orders).round(3),
+                "o_orderpriority": rng.choice(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-LOW"], n_orders),
+            }
+        ),
+        "customer": pd.DataFrame(
+            {
+                "c_custkey": np.arange(1, n_cust + 1, dtype="int64"),
+                "c_nationkey": rng.integers(0, 25, n_cust),
+                "c_mktsegment": rng.choice(["AUTOMOBILE", "BUILDING", "MACHINERY"], n_cust),
+            }
+        ),
+        "nation": pd.DataFrame(
+            {"n_nationkey": np.arange(25), "n_name": [f"NATION_{i:02d}" for i in range(25)]}
+        ),
+    }
+    schemas = {
+        "orders": pa.schema(
+            [
+                ("o_orderkey", pa.int64()),
+                ("o_custkey", pa.int64()),
+                ("o_totalprice", pa.decimal128(12, 2)),
+                ("o_weight", pa.float64()),
+                ("o_orderpriority", pa.string()),
+            ]
+        )
+    }
+    paths = {}
+    for name, frame in frames.items():
+        paths[name] = str(root / f"{name}.parquet")
+        table = pa.Table.from_pandas(frame, schema=schemas.get(name), preserve_index=False)
+        pq.write_table(table, paths[name])
+    return paths
+
+
+@pytest.fixture(scope="module")
+def catalog(spark, catalog_files):
+    """A long-lived caching DataSource over ``catalog_files``, each
+    table scanned once, so its cache holds exact row counts."""
+    ds = DataSource(spark=spark)
+    for name, fn in _FUNCTIONS.items():
+        ds.register_function(name, fn)
+    for name, path in catalog_files.items():
+        ds.query(f"CREATE TABLE {name} ('{path}')")
+        ds.query(f"SELECT COUNT(*) AS n FROM {name}")  # the cold scan
+    yield ds
+    for name in catalog_files:
+        ds.drop_table(name)
+    ds.function_registry.drop_all()
+
+
+# the catalog_session shapes, plus unaliased pandas CAST names, a
+# DECIMAL SUM and both kinds of custom function
+_CATALOG_SHAPES = {
+    "catalog_groupby_having": (
+        "SELECT o_orderpriority, COUNT(*) AS n, AVG(o_weight) AS w FROM orders "
+        "WHERE o_custkey % 3 = 1 GROUP BY o_orderpriority HAVING COUNT(*) > 100"
+    ),
+    "catalog_join2": (
+        "SELECT c.c_mktsegment, COUNT(*) AS n, SUM(o.o_weight) AS w "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "WHERE o.o_weight > 2.5 GROUP BY c.c_mktsegment"
+    ),
+    "catalog_join3": (
+        "SELECT n.n_name, COUNT(*) AS n_orders, SUM(o.o_weight) AS w "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "JOIN nation n ON c.c_nationkey = n.n_nationkey "
+        "WHERE c.c_mktsegment = 'BUILDING' GROUP BY n.n_name"
+    ),
+    "catalog_subquery_in": (
+        "SELECT COUNT(*) AS n FROM orders WHERE o_custkey IN "
+        "(SELECT c_custkey FROM customer WHERE c_nationkey = 7)"
+    ),
+    "catalog_subquery_scalar": (
+        "SELECT o_orderkey, o_weight FROM orders "
+        "WHERE o_weight > (SELECT AVG(o_weight) FROM orders) + 4.5"
+    ),
+    "catalog_point": (
+        "SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority FROM orders "
+        "WHERE o_orderkey = 1234"
+    ),
+    "catalog_cast_names": (
+        "SELECT o_orderkey, CAST(o_weight AS int), CAST(o_custkey AS str) FROM orders "
+        "WHERE o_orderkey < 60"
+    ),
+    "catalog_decimal_sum": (
+        "SELECT o_orderpriority, SUM(o_totalprice) AS total FROM orders GROUP BY o_orderpriority"
+    ),
+    "catalog_custom_function": (
+        "SELECT o_orderkey, bonus(o_weight) AS b FROM orders WHERE o_custkey < 30"
+    ),
+    "catalog_aggregate_function": (
+        "SELECT o_orderpriority, spread(o_weight) AS sp FROM orders GROUP BY o_orderpriority"
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", [*_SHAPES, *_CATALOG_SHAPES])
+def test_interpreted_one_shot_matches_compiled(request, named, shape):
+    if shape in _CATALOG_SHAPES:
+        catalog = request.getfixturevalue("catalog")
+        sql = _CATALOG_SHAPES[shape]
+        assert runs_interpreted(catalog.query_df(sql))
+        expected = _query_compiled(catalog, sql)
+        got = catalog.query(sql)
     else:
-        got = sql_query(sql, t=named, custom_functions=_FUNCTIONS)
+        sql = _SHAPES[shape]
+        expected = _query_compiled(request.getfixturevalue("compiled"), sql)
+        if " FROM temp " in sql:
+            got = named.sql(sql.replace(" FROM temp ", " "))
+        elif " JOIN u " in sql:
+            got = sql_query(sql, t=named, u=_GROUPS_FRAME)
+        else:
+            got = sql_query(sql, t=named, custom_functions=_FUNCTIONS)
     if np.isscalar(expected):
         assert got == pytest.approx(expected)
     else:
         pd.testing.assert_frame_equal(_sorted(got), _sorted(expected), check_dtype=False)
+
+
+def _catalog_fresh_literal_shapes(ds):
+    """GROUP BY/HAVING, 3-way join and IN-subquery reads of ``catalog``,
+    each with a literal this JVM has not seen yet."""
+    k = next(_LITERALS)
+    return [
+        lambda: ds.query(
+            "SELECT o_orderpriority, COUNT(*) AS n, SUM(o_totalprice) AS total FROM orders "
+            f"WHERE o_custkey % 7 = {k % 7} GROUP BY o_orderpriority HAVING COUNT(*) > {k}"
+        ),
+        lambda: ds.query(
+            "SELECT n.n_name, COUNT(*) AS n_orders FROM orders o "
+            "JOIN customer c ON o.o_custkey = c.c_custkey "
+            "JOIN nation n ON c.c_nationkey = n.n_nationkey "
+            f"WHERE o.o_weight > {k % 9}.{k % 1000:03d} GROUP BY n.n_name"
+        ),
+        lambda: ds.query(
+            "SELECT COUNT(*) AS n FROM orders WHERE o_custkey IN "
+            f"(SELECT c_custkey FROM customer WHERE c_nationkey = {k % 25}) AND o_orderkey > {k}"
+        ),
+    ]
+
+
+def test_cached_catalog_queries_compile_no_class(spark, catalog):
+    for run in _catalog_fresh_literal_shapes(catalog):  # first-use set-up compiles
+        run()
+    before = _compiles(spark)
+    for _ in range(2):
+        for run in _catalog_fresh_literal_shapes(catalog):
+            run()
+    assert _compiles(spark) == before
+
+
+@pytest.fixture(scope="module")
+def mode_files(tmp_path_factory):
+    """A small table and one a row above ``INTERPRETED_MAX_ROWS``, in
+    files no other test reads (the cache manager matches cached plans
+    across DataSources)."""
+    root = tmp_path_factory.mktemp("mode")
+    paths = {}
+    for name, rows in (("mode_small", 5_000), ("mode_big", INTERPRETED_MAX_ROWS + 1)):
+        keys = np.arange(rows, dtype="int64")
+        paths[name] = str(root / f"{name}.parquet")
+        pq.write_table(pa.table({"k": keys, "v": (keys % 1000).astype("float64")}), paths[name])
+    return paths
+
+
+_LARGE_OR_UNKNOWN = {
+    "cached_above_cut": "SELECT COUNT(*) AS n, SUM(v) AS s FROM mode_big WHERE k % 11 = {k}",
+    "uncached_file": "SELECT COUNT(*) AS n, SUM(v) AS s FROM mode_small WHERE k % 11 = {k}",
+    "subquery_above_cut": (
+        "SELECT COUNT(*) AS n FROM mode_small WHERE k IN (SELECT k FROM mode_big WHERE v = {k})"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_LARGE_OR_UNKNOWN))
+def test_catalog_query_with_a_large_or_uncounted_leaf_compiles(spark, mode_files, case):
+    ds = DataSource(spark=spark, cache=case != "uncached_file")
+    for name, path in mode_files.items():
+        ds.query(f"CREATE TABLE {name} ('{path}')")
+    try:
+        for name in mode_files:
+            ds.query(f"SELECT COUNT(*) AS n FROM {name}")  # the cold scans
+        sql = _LARGE_OR_UNKNOWN[case]
+        ds.query(sql.format(k=next(_LITERALS)))  # first-use set-up compiles
+        assert not runs_interpreted(ds.query_df(sql.format(k=0)))
+        before = _compiles(spark)
+        ds.query(sql.format(k=next(_LITERALS)))
+        assert _compiles(spark) > before
+    finally:
+        for name in mode_files:
+            ds.drop_table(name)
 
 
 @pytest.fixture()
@@ -371,29 +576,60 @@ def caller_ansi(spark):
     spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
+@pytest.fixture()
+def people_ds(spark, people):
+    """A long-lived DataSource on the caller's session with ``people``
+    as ``people_t`` (the caller's own ``t`` stays out of its way)."""
+    ds = DataSource(spark=spark, cache=False)
+    ds.add_table("people_t", people)
+    yield ds
+    ds.drop_table("people_t")
+    ds.function_registry.drop_all()
+
+
+def _batch_rows(s):
+    return s * 0 + len(s)
+
+
 @pytest.mark.parametrize("fails", [False, True], ids=["success", "failure"])
 def test_one_shot_leaves_caller_session_alone(
-    spark, people, batch_rows, caller_view_t, caller_ansi, fails
+    spark, people, people_ds, batch_rows, caller_view_t, caller_ansi, fails
 ):
     codegen = {key: spark.conf.get(key) for key in INTERPRETED_CONFS}
     to_df = RDD.toDF  # bound to a session by each SparkSession constructor
     batch_rows(100)
-    if fails:
-        # the caller's ANSI mode applies inside the call
+    people_ds.register_function("batch_rows", _batch_rows)
+    entry_points = {
+        "sql_query": lambda sql: sql_query(
+            sql.format(t="t"), t=people, custom_functions={"batch_rows": _batch_rows}
+        ),
+        "DataSource.query": lambda sql: people_ds.query(sql.format(t="people_t")),
+    }
+    for run in entry_points.values():
+        if fails:
+            # the caller's ANSI mode applies inside the call
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                run("SELECT id / 0 AS x FROM {t}")
+        else:
+            # the caller's batch size applies inside the call
+            assert run("SELECT MAX(batch_rows(id)) AS n FROM {t}") == 100
+        assert SparkSession.getActiveSession() is spark
+        assert {key: spark.conf.get(key) for key in INTERPRETED_CONFS} == codegen
+        assert spark.table("t").toPandas()["id"].tolist() == [-1, -2]
+        assert RDD.toDF is to_df
+
+
+def test_query_honours_caller_confs_set_after_the_datasource(spark, people_ds):
+    sql = "SELECT MAX(id / 0) AS x FROM people_t"
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        assert pd.isna(people_ds.query(sql))
+        spark.conf.set("spark.sql.ansi.enabled", "true")
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            sql_query("SELECT id / 0 AS x FROM t", t=people)
-    else:
-        # the caller's batch size applies inside the call
-        largest = sql_query(
-            "SELECT MAX(batch_rows(id)) AS n FROM t",
-            t=people,
-            custom_functions={"batch_rows": lambda s: s * 0 + len(s)},
-        )
-        assert largest == 100
-    assert SparkSession.getActiveSession() is spark
-    assert {key: spark.conf.get(key) for key in INTERPRETED_CONFS} == codegen
-    assert spark.table("t").toPandas()["id"].tolist() == [-1, -2]
-    assert RDD.toDF is to_df
+            people_ds.query(sql)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_one_shot_analysis_error_leaves_caller_session_alone(spark, people, caller_view_t):
@@ -404,7 +640,7 @@ def test_one_shot_analysis_error_leaves_caller_session_alone(spark, people, call
 
 
 def test_leaked_child_session_resolves_to_its_parent(spark):
-    child = one_shot_session(spark, interpreted=True)
+    child = one_shot_session(spark)
     activate(child)
     try:
         assert current_spark() is spark
@@ -454,18 +690,19 @@ def test_concurrent_one_shots_keep_rdd_to_df(spark, people, monkeypatch):
     assert RDD.toDF is to_df
 
 
-def test_child_sessions_are_freed_soon_after_the_call(spark, people, monkeypatch):
+def test_child_sessions_are_freed_soon_after_the_call(spark, people, people_ds, monkeypatch):
     """Spark's AQE result-stage and broadcast pool threads inherit the
     child active where they start; they must not keep it for long."""
     jvm = spark._jvm
     refs = []
 
-    def tracked(parent, interpreted):
-        child = one_shot_session(parent, interpreted)
+    def tracked(parent):
+        child = one_shot_session(parent)
         refs.append(jvm.java.lang.ref.WeakReference(child._jsparkSession))
         return child
 
     monkeypatch.setattr(dfsql_spark, "one_shot_session", tracked)
+    monkeypatch.setattr(dfsql_spark.datasource, "one_shot_session", tracked)
     groups = pd.DataFrame({"grp": list("abcde"), "w": range(5)})
     for i in range(3):
         sql_query(f"SELECT grp, COUNT(*) AS n FROM t WHERE age > {20 + i} GROUP BY grp", t=people)
@@ -475,6 +712,9 @@ def test_child_sessions_are_freed_soon_after_the_call(spark, people, monkeypatch
             t=people,
             u=groups,
         )
+    for i in range(300):
+        people_ds.query(f"SELECT COUNT(*) AS n FROM people_t WHERE age > {i % 50 + 18}")
+    assert len(refs) == 306
     deadline = time.monotonic() + POOL_KEEP_ALIVE_S + 15
     while True:
         gc.collect()  # drop the Python wrappers, so py4j releases the JVM objects
@@ -527,16 +767,23 @@ def test_matching_case_sensitivity_writes_no_conf(spark, people, conf_writes):
     session_value = spark.conf.get("spark.sql.caseSensitive") == "true"
     ds = DataSource(spark=spark, cache=False, case_sensitive=session_value)
     ds.add_table("cs_match", people)
+    sensitivity = [(False, "spark.sql.caseSensitive")]
     try:
-        assert ds.query("SELECT COUNT(*) AS n FROM cs_match") == len(people)
+        # query_df analyzes on the DataSource's own session
+        assert ds.query_df("SELECT COUNT(*) AS n FROM cs_match").first()["n"] == len(people)
+        assert conf_writes == []
+        # query() sets the DataSource's sensitivity once, on its child only
+        for case_sensitive in (session_value, not session_value):
+            conf_writes.clear()
+            ds.case_sensitive = case_sensitive
+            assert ds.query("SELECT COUNT(*) AS n FROM cs_match") == len(people)
+            assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == sensitivity
+            assert not any(on_caller for on_caller, _ in conf_writes)
     finally:
         ds.drop_table("cs_match")
-    assert conf_writes == []
     # a one-shot call sets its sensitivity once, on the child only
     for case_sensitive in (True, False):
         conf_writes.clear()
         sql_query("SELECT COUNT(*) AS n FROM t", t=people, ds_kwargs={"case_sensitive": case_sensitive})
-        assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == [
-            (False, "spark.sql.caseSensitive")
-        ]
+        assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == sensitivity
         assert not any(on_caller for on_caller, _ in conf_writes)
