@@ -14,6 +14,7 @@ text / multimodal) and ``streaming``.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -64,37 +65,26 @@ def sql_query(
     one-shot :class:`DataSource` (reference signature's ``ds_kwargs=``,
     dfsql/__init__.py:12,22 — e.g. ``{"case_sensitive": False}``).
     Unlike the reference there is no CSV round-trip: pandas input
-    crosses to the JVM once via Arrow, Spark DataFrames are registered
-    as-is, and views and custom functions are dropped afterwards.
+    crosses to the JVM once via Arrow.
 
     The one-shot ``DataSource`` does not cache (``cache=False``) unless
     ``ds_kwargs`` sets ``cache``: its views live for one query, and a
     pandas table is already in JVM memory, so a cache pin would only
     add a job.
 
-    When every table is a pandas frame, the query runs in a child
-    session cloned from ``spark``: it inherits the caller's runtime
-    confs, temp views and functions, and shares the SparkContext and
-    cache manager, but the one-shot views, functions and confs stay in
-    the child, so a caller's own view named like a keyword is left as
-    it is.  :meth:`DataSource.query` runs the query in that child and
-    picks its mode by the plan's leaf row counts
-    (:func:`session.runs_interpreted`): a pandas frame is a
-    ``LocalRelation`` with an exact count, so a query over frames of
-    up to :data:`session.INTERPRETED_MAX_ROWS` rows runs Spark's
-    interpreted operators (:data:`session.INTERPRETED_CONFS`), as
-    compiling classes for it, with its literals inlined, costs more
-    than interpreting it.  A Spark DataFrame input is registered on
-    its own session, as classic PySpark cannot rebind a DataFrame to
-    another session; :meth:`DataSource.query` then clones its child
-    from ``spark``, and applies the same leaf rule.
+    The query runs in a child session cloned from ``spark``: it
+    inherits the caller's runtime confs, temp views and functions, and
+    shares the SparkContext and cache manager, but the one-shot views
+    (a Spark DataFrame is rebound to the child), functions and confs
+    stay in the child, so a caller's own view named like a keyword is
+    left as it is.  :meth:`DataSource.query` runs the query in that
+    child, interpreted or compiled by the plan's leaf row counts.
 
     Without ``spark=``, the active (else the default) session is used
     as it is; a session is built only when none exists.
     """
     if not table_dfs:
         raise DfsqlException("At least one table must be provided")
-    spark = spark or current_spark()
     word_re = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
     sql_words = {w.lower() for w in word_re.findall(sql)}
     for name in table_dfs:
@@ -103,10 +93,16 @@ def sql_query(
             raise DfsqlException(
                 f"Table {name} is not used in the query"
             )
-    if all(isinstance(df, pd.DataFrame) for df in table_dfs.values()):
-        session = one_shot_session(spark)
-    else:
-        session = spark
+    with _one_shot(spark or current_spark(), table_dfs, custom_functions, ds_kwargs) as ds:
+        return ds.query(sql, reduce_output=reduce_output)
+
+
+@contextmanager
+def _one_shot(spark, table_dfs, custom_functions=None, ds_kwargs=None):
+    """A throwaway :class:`DataSource` with ``table_dfs`` and
+    ``custom_functions`` in a child of ``spark``; afterwards ``spark``
+    is active and the views and functions are dropped."""
+    session = one_shot_session(spark)
     ds = DataSource(spark=session, **{"cache": False, **(ds_kwargs or {})})
     registered = []
     try:
@@ -119,10 +115,9 @@ def sql_query(
                 )
             ds.add_table(name, df)
             registered.append(name)
-        return ds.query(sql, reduce_output=reduce_output)
+        yield ds
     finally:
-        if session is not spark:
-            activate(spark)
+        activate(spark)
         # dropping a view also unpins it from the shared cache manager
         # when ds_kwargs asked for a cache
         for name in registered:

@@ -16,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import threading
 from typing import Callable
 
 import pandas as pd
@@ -33,25 +32,14 @@ from .exceptions import (
 from .functions.registry import FunctionRegistry
 from .session import (
     INTERPRETED_CONFS,
-    activate,
     current_spark,
     one_shot_session,
+    rebind,
     runs_interpreted,
 )
 from .sources.tables import TableInfo, read_file
 
 METADATA_FILE = "datasource_tables.json"
-
-# ``spark.sql.caseSensitive`` is session-global; ``query_df`` and the
-# commands analyze on the DataSource's own session, so their per-query
-# set/analyze/restore window in ``_sql`` must not interleave across
-# threads, or a query can analyze under another DataSource's
-# sensitivity (and restore a stale value).  One process-wide lock:
-# sessions are a process-level resource and the guarded window is only
-# parse+analyze (execution happens outside it).  ``query()`` takes no
-# lock: it analyzes in a per-query child session that carries its own
-# sensitivity.
-_CASE_SENSITIVITY_LOCK = threading.Lock()
 
 
 # QueryExecutionException historically lived here; it now sits in the
@@ -166,7 +154,9 @@ class DataSource:
         single partition, so GROUP BY, HAVING and ORDER BY over it plan
         no exchange and a pandas UDF over it runs one Python task.
         Larger frames, and any frame when the batch size is unlimited
-        (``<= 0``), keep the partitions ``createDataFrame`` gives them."""
+        (``<= 0``), keep the partitions ``createDataFrame`` gives them.
+        A Spark DataFrame is rebound to this DataSource's session
+        (:func:`session.rebind`) and registered there."""
         if isinstance(df, pd.DataFrame):
             per_batch = int(
                 self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -175,6 +165,8 @@ class DataSource:
             df = self.spark.createDataFrame(df)
             if small:
                 df = df.coalesce(1)
+        else:
+            df = rebind(df, self.spark)
         df.createOrReplaceTempView(name)
         old = self._resolve_name(name)
         self.cache.evict(self.spark, old)
@@ -278,7 +270,10 @@ class DataSource:
 
         This is the scale-path API: no action is triggered, so the
         result can feed further transformations, a write, or a stream
-        without materializing on the driver.
+        without materializing on the driver.  The query is analyzed in
+        a per-query child, as in :meth:`query`, and rebound to the
+        DataSource's session (:func:`session.rebind`), whose confs it
+        runs under (compiled).
         """
         cmd = try_parse_command(sql)
         if cmd is not None:
@@ -286,7 +281,7 @@ class DataSource:
             if isinstance(result, pd.DataFrame):
                 return self.spark.createDataFrame(result)
             return self.spark.createDataFrame([(str(result),)], ["status"])
-        return self._sql(sql)
+        return rebind(self._sql(sql), self.spark)
 
     def _execute_command(self, cmd):
         """Run a command, normalizing non-engine failures to
@@ -302,8 +297,12 @@ class DataSource:
             raise CommandException(str(e).split("\n")[0]) from e
 
     def _sql(self, sql: str) -> DataFrame:
-        """``spark.sql`` with errors mapped onto the reference hierarchy
-        (exceptions.py): ``ParseException`` → :class:`SQLParsingException`,
+        """``sql`` analyzed in the per-query child: the DataSource's
+        session when that is a one-shot child already (``sql_query``),
+        else a clone of it (:func:`session.one_shot_session`), with this
+        DataSource's case sensitivity set on the child only.  Errors are
+        mapped onto the reference hierarchy (exceptions.py):
+        ``ParseException`` → :class:`SQLParsingException`,
         ``AnalysisException`` → :class:`QueryExecutionException`
         (reference: dfsql/exceptions.py:1-14), keeping the Spark
         exception as ``__cause__`` for debugging.
@@ -315,35 +314,21 @@ class DataSource:
         (dfsql/table.py:29-34, wired at base_data_source.py:76-79).
         ``cacheTable`` only *marks* the plan; no job runs here.
         """
-        # Scope case sensitivity to this query: spark.sql analyzes
-        # eagerly, so name resolution happens inside the set/restore
-        # window and the session-global conf is left untouched.  The
-        # lock keeps concurrent DataSources (sharing one session) from
-        # analyzing under each other's sensitivity.  When the session
-        # already has this DataSource's sensitivity, the conf is not
-        # written at all, but analysis still runs under the lock.
-        want = str(self.case_sensitive).lower()
-        with _CASE_SENSITIVITY_LOCK:
-            prev = self.spark.conf.get("spark.sql.caseSensitive")
-            if prev != want:
-                self.spark.conf.set("spark.sql.caseSensitive", want)
-            try:
-                out = self._analyze(self.spark, sql)
-            finally:
-                if prev != want:
-                    self.spark.conf.set("spark.sql.caseSensitive", prev)
-        self._touch_referenced(sql)
-        return out
-
-    def _analyze(self, spark: SparkSession, sql: str) -> DataFrame:
         from pyspark.errors import AnalysisException, ParseException
 
+        if hasattr(self.spark, "_one_shot_parent"):
+            child = self.spark
+        else:
+            child = one_shot_session(self.spark)
+        child.conf.set("spark.sql.caseSensitive", str(self.case_sensitive).lower())
         try:
-            return spark.sql(rewrite(sql, self.function_registry.name_map()))
+            out = child.sql(rewrite(sql, self.function_registry.name_map()))
         except ParseException as e:
             raise SQLParsingException(str(e).split("\n")[0]) from e
         except AnalysisException as e:
             raise QueryExecutionException(str(e).split("\n")[0]) from e
+        self._touch_referenced(sql)
+        return out
 
     def _touch_referenced(self, sql: str) -> None:
         """Mark every registered table named in ``sql`` as used, driving
@@ -391,12 +376,12 @@ class DataSource:
         the child, so the query takes no lock and writes no conf of the
         DataSource's session.  When every leaf of the plan has a known
         row count of at most :data:`session.INTERPRETED_MAX_ROWS`
-        (:func:`session.runs_interpreted`: a pandas table, or a cached
-        table after its first scan), the child runs Spark's
+        (:func:`session.runs_interpreted`: a pandas table, a cached
+        table after its first scan, or no table), the child runs Spark's
         interpreted operators, so fresh literals compile no classes.
         File scans, a cached table's first scan, :meth:`query_df` and
-        the commands run compiled.  The session that was active before
-        the call is active again after it, also after an error.
+        the commands run compiled.  The active session is left as it
+        was.
 
         This is the *API boundary only* — all computation has already
         happened distributed; only the final (small) result crosses to
@@ -405,22 +390,11 @@ class DataSource:
         cmd = try_parse_command(sql)
         if cmd is not None:
             return self._execute_command(cmd)
-        active = SparkSession._activeSession
-        try:
-            if hasattr(self.spark, "_one_shot_parent"):
-                session = self.spark
-            else:
-                session = one_shot_session(self.spark)
-            session.conf.set("spark.sql.caseSensitive", str(self.case_sensitive).lower())
-            result = self._analyze(session, sql)
-            self._touch_referenced(sql)
-            if runs_interpreted(result):
-                for key, value in INTERPRETED_CONFS.items():
-                    session.conf.set(key, value)
-            pdf = result.toPandas()
-        finally:
-            if active is not None:
-                activate(active)
+        result = self._sql(sql)
+        if runs_interpreted(result):
+            for key, value in INTERPRETED_CONFS.items():
+                result.sparkSession.conf.set(key, value)
+        pdf = result.toPandas()
         pdf.columns = [_clean_name(c) for c in pdf.columns]
         if reduce_output:
             return _reduce_output(pdf)

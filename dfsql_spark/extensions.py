@@ -15,16 +15,11 @@ Execution is fully distributed; only the accessor boundary is pandas.
 
 from __future__ import annotations
 
-import threading
 from typing import Callable
 
 import pandas as pd
 
 from .dialect import tokenize
-
-# serializes accessor calls that register the shared `temp` view (see
-# PandasOnSparkSQLAccessor.__call__)
-_ACCESSOR_VIEW_LOCK = threading.Lock()
 
 __all__ = ["maybe_add_from_to_query", "SQLAccessor"]
 
@@ -144,6 +139,8 @@ try:
         """``psdf.sql("SELECT a WHERE b > 1")`` for pandas-on-Spark
         DataFrames; the DataFrame is visible as table ``temp`` and
         FROM-less SELECTs get it injected, like the pandas accessor.
+        ``temp`` lives in a one-shot child, as for ``sql_query``; the
+        lazy result is rebound to the DataFrame's session.
 
         Divergence from the pandas/modin accessor (documented): the
         result stays a lazy pandas-on-Spark DataFrame by default —
@@ -162,31 +159,18 @@ try:
             reduce_output: bool = False,
             from_table: str = "temp",
         ):
-            from .datasource import DataSource
+            from . import _one_shot
+            from .session import rebind
 
             sdf = self._psdf.to_spark()
-            ds = DataSource(spark=sdf.sparkSession, cache=False)
-            # The view name is part of the accessor contract (the SQL
-            # may say "FROM temp" explicitly), so it cannot be made
-            # unique per call.  The lock serializes register→analyze→
-            # drop within this process so two threads' accessor calls
-            # can't read each other's data.  A pre-existing USER view of
-            # the same name is replaced and then dropped: the Spark
-            # DataFrame is registered on its own session, which classic
-            # PySpark cannot rebind to a child session.  (The pandas
-            # accessor registers in a one-shot child session through
-            # sql_query and leaves the caller's views alone.)
-            with _ACCESSOR_VIEW_LOCK:
-                ds.add_table(from_table, sdf)
-                try:
-                    sql = maybe_add_from_to_query(sql, table_name=from_table)
-                    if reduce_output:
-                        return ds.query(sql, reduce_output=True)
-                    # analysis resolves the view eagerly here; after
-                    # this the plan no longer needs it
-                    out = ds.query_df(sql)
-                finally:
-                    ds.drop_table(from_table)
-            return out.pandas_api()
+            caller = sdf.sparkSession
+            sql = maybe_add_from_to_query(sql, table_name=from_table)
+            # the view lives in a one-shot child, as for sql_query, so
+            # concurrent calls and a caller's own ``temp`` do not meet
+            with _one_shot(caller, {from_table: sdf}) as ds:
+                if reduce_output:
+                    return ds.query(sql, reduce_output=True)
+                out = ds.query_df(sql)
+            return rebind(out, caller).pandas_api()
 except ImportError:  # pragma: no cover - pyspark.pandas needs pandas>=1.0
     pass

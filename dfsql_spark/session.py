@@ -207,6 +207,19 @@ def one_shot_session(spark: SparkSession) -> SparkSession:
     return child
 
 
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a DataFrame of ``spark``: names stay
+    resolved as in ``df``'s session, the rest follows ``spark``'s confs,
+    and cached data still matches.  ``Dataset.ofRows`` is internal;
+    tests/test_one_shot.py pins it."""
+    if df.sparkSession is spark:
+        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, spark)
+
+
 def _scala_items(seq):
     it = seq.iterator()
     while it.hasNext():
@@ -219,16 +232,21 @@ def runs_interpreted(df: DataFrame) -> bool:
     has a known row count, and none has more than
     :data:`INTERPRETED_MAX_ROWS` rows.  A pandas frame is a
     ``LocalRelation`` and a cached table scanned once is an
-    ``InMemoryRelation``, both with exact counts; a file scan, and a
-    cached table before its first scan, have none.  It reads the
-    analyzed plan only, so the caller can still set the confs before
-    the optimizer runs (``ConvertToLocalRelation`` evaluates filters
-    over a ``LocalRelation`` through generated predicates)."""
+    ``InMemoryRelation``, both with exact counts; a ``OneRowRelation``
+    (``SELECT`` with no table) reports none but counts as one row; a
+    file scan, and a cached table before its first scan, have none.
+    It reads the analyzed plan only, so the caller can still set the
+    confs before the optimizer runs (``ConvertToLocalRelation``
+    evaluates filters over a ``LocalRelation`` through generated
+    predicates)."""
     plan = df._jdf.queryExecution().withCachedData()
     for tree in (plan, *_scala_items(plan.subqueriesAll())):
         for leaf in _scala_items(tree.collectLeaves()):
             rows = leaf.stats().rowCount()
-            if not rows.isDefined() or rows.get() > INTERPRETED_MAX_ROWS:
+            if rows.isDefined():
+                if rows.get() > INTERPRETED_MAX_ROWS:
+                    return False
+            elif leaf.nodeName() != "OneRowRelation":
                 return False
     return True
 

@@ -5,6 +5,9 @@ FROM-less selects, explicit FROM temp, nested subselects, reduce_output
 collapse, and custom functions through the accessor.
 """
 
+import sys
+import threading
+
 import pandas as pd
 import pytest
 
@@ -119,3 +122,49 @@ class TestPandasOnSparkAccessor:
         psdf = self._psdf(spark)
         psdf.sql("SELECT a WHERE a = 1").to_pandas()
         assert not spark.catalog.tableExists("temp")
+
+    def test_caller_temp_view_survives(self, spark):
+        spark.createDataFrame(pd.DataFrame({"a": [-1]})).createOrReplaceTempView("temp")
+        try:
+            psdf = self._psdf(spark)
+            assert psdf.sql("SELECT SUM(a) AS s", reduce_output=True) == 10
+            assert sorted(psdf.sql("SELECT a WHERE a > 2").to_pandas()["a"]) == [3, 4]
+            assert spark.table("temp").toPandas()["a"].tolist() == [-1]
+        finally:
+            spark.catalog.dropTempView("temp")
+
+    def test_concurrent_calls_get_their_own_results(self, spark):
+        import pyspark.pandas as ps
+
+        # more threads than local cores, switching often
+        frames = {
+            base: ps.DataFrame({"a": range(base, base + 50)}) for base in range(0, 6000, 1000)
+        }
+        start = threading.Barrier(len(frames))
+        errors = []
+
+        def loop(base):
+            try:
+                start.wait(60)
+                for i in range(4):
+                    sql = f"SELECT MIN(a) AS lo, COUNT(*) AS n WHERE a >= {base + i}"
+                    if i % 2:
+                        got = frames[base].sql(sql).to_pandas()
+                    else:
+                        got = frames[base].sql(sql, reduce_output=True)
+                    assert got.values.tolist() == [[base + i, 50 - i]]
+            except Exception as e:  # reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=loop, args=(base,)) for base in frames]
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-4)
+        try:
+            for thread in threads:
+                thread.start()
+            for thread in threads:
+                thread.join(300)
+        finally:
+            sys.setswitchinterval(switch)
+        assert not any(thread.is_alive() for thread in threads)
+        assert errors == []

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import gc
 import itertools
+import sys
 import threading
 import time
 from decimal import Decimal
@@ -25,6 +26,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark.pandas as ps
 import pyspark.sql.session
 import pytest
 from pyspark import RDD
@@ -42,6 +44,7 @@ from dfsql_spark.session import (
     activate,
     current_spark,
     one_shot_session,
+    rebind,
     runs_interpreted,
 )
 
@@ -261,6 +264,8 @@ def _fresh_literal_shapes(frame):
             f"SELECT id, CAST(age AS str) AS a, CAST(score AS int) AS s FROM t WHERE id < {k}",
             t=frame,
         ),
+        # a subquery with no table reads a OneRowRelation
+        lambda: sql_query(f"SELECT COUNT(*) AS n FROM t WHERE id < (SELECT {k} * 2)", t=frame),
     ]
 
 
@@ -505,6 +510,9 @@ def _catalog_fresh_literal_shapes(ds):
             "SELECT COUNT(*) AS n FROM orders WHERE o_custkey IN "
             f"(SELECT c_custkey FROM customer WHERE c_nationkey = {k % 25}) AND o_orderkey > {k}"
         ),
+        # no table, and a subquery with no table: OneRowRelation leaves
+        lambda: ds.query(f"SELECT {k} ^ 3 ^ 2 AS p, {k} % 7 AS r"),
+        lambda: ds.query(f"SELECT COUNT(*) AS n FROM orders WHERE o_orderkey < (SELECT {k} * 3)"),
     ]
 
 
@@ -639,6 +647,100 @@ def test_one_shot_analysis_error_leaves_caller_session_alone(spark, people, call
     assert spark.table("t").toPandas()["id"].tolist() == [-1, -2]
 
 
+def test_spark_frame_input_leaves_caller_view_alone(spark, caller_view_t):
+    frame = spark.createDataFrame(pd.DataFrame({"id": [1, 2, 3]}))
+    assert sql_query("SELECT SUM(id) AS s FROM t", t=frame) == 6
+    assert spark.table("t").toPandas()["id"].tolist() == [-1, -2]
+
+
+def test_add_table_rebinds_a_frame_of_another_session(spark, monkeypatch):
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)  # each session constructor rebinds it
+    other = spark.newSession()
+    try:
+        frame = other.createDataFrame(pd.DataFrame({"v": [1, 2, 3]}))
+    finally:
+        activate(spark)
+    ds = DataSource(spark=spark, cache=False)
+    ds.add_table("xo", frame)
+    try:
+        assert ds.query("SELECT SUM(v) AS s FROM xo") == 6
+        assert not other.catalog.tableExists("xo")
+    finally:
+        ds.drop_table("xo")
+
+
+def test_rebind_keeps_values_resolution_and_cached_plan(spark):
+    """``Dataset.ofRows`` is internal: a rebound frame belongs to its
+    new session, keeps its values and names as resolved, and still
+    reads a cached plan's ``InMemoryRelation``."""
+    child = one_shot_session(spark)
+    frame = spark.createDataFrame(pd.DataFrame({"v": [3, 1, 2]})).filter("v > 1").cache()
+    try:
+        frame.count()
+        assert rebind(frame, spark) is frame
+        for df, session in ((frame, child), (rebind(frame, child), spark)):
+            out = rebind(df, session)
+            assert out.sparkSession is session
+            assert sorted(r.v for r in out.collect()) == [2, 3]
+            assert "InMemoryRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        frame.unpersist()
+    # resolved case-insensitively in the child, run on a case-sensitive caller
+    prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    child = one_shot_session(spark)
+    child.conf.set("spark.sql.caseSensitive", "false")
+    try:
+        lower = child.range(3).selectExpr("id AS NaMe").selectExpr("name")
+        assert [r[0] for r in rebind(lower, spark).collect()] == [0, 1, 2]
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", prev)
+
+
+def test_concurrent_query_df_resolve_under_own_sensitivity(spark):
+    """Two DataSources of opposite case sensitivity on one session,
+    analyzing at the same time, each resolve under their own."""
+    frame = pd.DataFrame({"NaMe": ["x", "y"]})
+    sensitive = DataSource(spark=spark, cache=False, case_sensitive=True)
+    insensitive = DataSource(spark=spark, cache=False, case_sensitive=False)
+    sensitive.add_table("cs_on", frame)
+    insensitive.add_table("cs_off", frame)
+    prev = spark.conf.get("spark.sql.caseSensitive")
+    # more threads than local cores, switching often
+    pairs = [(sensitive, "cs_on"), (insensitive, "cs_off")] * 3
+    start = threading.Barrier(len(pairs))
+    errors = []
+
+    def loop(ds, table):
+        try:
+            start.wait(60)
+            for i in range(8):
+                sql = f"SELECT name FROM {table} WHERE LENGTH(NaMe) > {-i}"
+                if ds.case_sensitive:
+                    with pytest.raises(QueryExecutionException):
+                        ds.query_df(sql)
+                else:
+                    assert sorted(r[0] for r in ds.query_df(sql).collect()) == ["x", "y"]
+        except (Exception, pytest.fail.Exception) as e:  # reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=loop, args=pair) for pair in pairs]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for thread in threads:
+            thread.start()
+        for thread in threads:
+            thread.join(300)
+    finally:
+        sys.setswitchinterval(switch)
+        sensitive.drop_table("cs_on")
+        insensitive.drop_table("cs_off")
+    assert not any(thread.is_alive() for thread in threads)
+    assert errors == []
+    assert spark.conf.get("spark.sql.caseSensitive") == prev
+
+
 def test_leaked_child_session_resolves_to_its_parent(spark):
     child = one_shot_session(spark)
     activate(child)
@@ -690,7 +792,9 @@ def test_concurrent_one_shots_keep_rdd_to_df(spark, people, monkeypatch):
     assert RDD.toDF is to_df
 
 
-def test_child_sessions_are_freed_soon_after_the_call(spark, people, people_ds, monkeypatch):
+def test_child_sessions_are_freed_soon_after_the_call(
+    spark, people, people_ds, monkeypatch, tmp_path
+):
     """Spark's AQE result-stage and broadcast pool threads inherit the
     child active where they start; they must not keep it for long."""
     jvm = spark._jvm
@@ -714,7 +818,14 @@ def test_child_sessions_are_freed_soon_after_the_call(spark, people, people_ds, 
         )
     for i in range(300):
         people_ds.query(f"SELECT COUNT(*) AS n FROM people_t WHERE age > {i % 50 + 18}")
-    assert len(refs) == 306
+    psdf = ps.DataFrame({"a": range(10)})
+    for i in range(3):
+        people_ds.query_df(f"SELECT COUNT(*) AS n FROM people_t WHERE age > {20 + i}").collect()
+        people_ds.query(
+            f"COPY (SELECT id FROM people_t WHERE age > {20 + i}) TO '{tmp_path / str(i)}'"
+        )
+        psdf.sql(f"SELECT COUNT(*) AS n WHERE a > {i}").to_pandas()
+    assert len(refs) == 315
     deadline = time.monotonic() + POOL_KEEP_ALIVE_S + 15
     while True:
         gc.collect()  # drop the Python wrappers, so py4j releases the JVM objects
@@ -768,17 +879,17 @@ def test_matching_case_sensitivity_writes_no_conf(spark, people, conf_writes):
     ds = DataSource(spark=spark, cache=False, case_sensitive=session_value)
     ds.add_table("cs_match", people)
     sensitivity = [(False, "spark.sql.caseSensitive")]
+    sql = "SELECT COUNT(*) AS n FROM cs_match"
     try:
-        # query_df analyzes on the DataSource's own session
-        assert ds.query_df("SELECT COUNT(*) AS n FROM cs_match").first()["n"] == len(people)
-        assert conf_writes == []
-        # query() sets the DataSource's sensitivity once, on its child only
+        # query_df and query() set the DataSource's sensitivity once,
+        # on their child only
         for case_sensitive in (session_value, not session_value):
-            conf_writes.clear()
             ds.case_sensitive = case_sensitive
-            assert ds.query("SELECT COUNT(*) AS n FROM cs_match") == len(people)
-            assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == sensitivity
-            assert not any(on_caller for on_caller, _ in conf_writes)
+            for run in (lambda: ds.query_df(sql).first()["n"], lambda: ds.query(sql)):
+                conf_writes.clear()
+                assert run() == len(people)
+                assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == sensitivity
+                assert not any(on_caller for on_caller, _ in conf_writes)
     finally:
         ds.drop_table("cs_match")
     # a one-shot call sets its sensitivity once, on the child only
