@@ -65,7 +65,8 @@ def sql_query(
     one-shot :class:`DataSource` (reference signature's ``ds_kwargs=``,
     dfsql/__init__.py:12,22 — e.g. ``{"case_sensitive": False}``).
     Unlike the reference there is no CSV round-trip: pandas input
-    crosses to the JVM once via Arrow.
+    crosses to the JVM via Arrow, and a frame passed again unchanged
+    reuses its first conversion (:meth:`DataSource.add_table`).
 
     The one-shot ``DataSource`` does not cache (``cache=False``) unless
     ``ds_kwargs`` sets ``cache``: its views live for one query, and a
@@ -76,9 +77,10 @@ def sql_query(
     inherits the caller's runtime confs, temp views and functions, and
     shares the SparkContext and cache manager, but the one-shot views
     (a Spark DataFrame is rebound to the child), functions and confs
-    stay in the child, so a caller's own view named like a keyword is
-    left as it is.  :meth:`DataSource.query` runs the query in that
-    child, interpreted or compiled by the plan's leaf row counts.
+    stay in the child and are discarded with it, so a caller's own
+    view named like a keyword is left as it is.
+    :meth:`DataSource.query` runs the query in that child, interpreted
+    or compiled by the plan's leaf row counts.
 
     Without ``spark=``, the active (else the default) session is used
     as it is; a session is built only when none exists.
@@ -101,7 +103,8 @@ def sql_query(
 def _one_shot(spark, table_dfs, custom_functions=None, ds_kwargs=None):
     """A throwaway :class:`DataSource` with ``table_dfs`` and
     ``custom_functions`` in a child of ``spark``; afterwards ``spark``
-    is active and the views and functions are dropped."""
+    is active, and the child is discarded with its views and
+    functions."""
     session = one_shot_session(spark)
     ds = DataSource(spark=session, **{"cache": False, **(ds_kwargs or {})})
     registered = []
@@ -118,11 +121,11 @@ def _one_shot(spark, table_dfs, custom_functions=None, ds_kwargs=None):
         yield ds
     finally:
         activate(spark)
-        # dropping a view also unpins it from the shared cache manager
-        # when ds_kwargs asked for a cache
-        for name in registered:
-            session.catalog.dropTempView(name)
-        ds.function_registry.drop_all()
+        # the cache manager is shared with ``spark``: dropping a view
+        # that ds_kwargs asked to cache unpins it
+        if (ds_kwargs or {}).get("cache"):
+            for name in registered:
+                session.catalog.dropTempView(name)
 
 
 # importing the package registers the pandas ``.sql`` accessor

@@ -16,8 +16,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
+import weakref
+from collections import OrderedDict
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,6 +44,32 @@ from .session import (
 from .sources.tables import TableInfo, read_file
 
 METADATA_FILE = "datasource_tables.json"
+
+# Every session conf PySpark's pandas ``createDataFrame`` reads
+# (pyspark/sql/pandas/conversion.py), plus the local-relation threshold;
+# a converted frame is reused only under the values it was built with.
+# ``maxRecordsPerBatch`` also drives ``add_table``'s one-partition rule.
+_MAX_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+_CONVERSION_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.execution.arrow.pyspark.fallback.enabled",
+    _MAX_RECORDS,
+    "spark.sql.execution.arrow.useLargeVarTypes",
+    "spark.sql.execution.pandas.convertToArrowArraySafely",
+    "spark.sql.timestampType",
+    "spark.sql.execution.pandas.inferPandasDictAsMap",
+    "spark.sql.execution.arrow.localRelationThreshold",
+)
+
+# Most pandas cells (rows x columns) whose converted relations
+# ``_CONVERTED`` keeps; the least recently used frames go first.  A
+# converted frame is a ``LocalRelation`` of about 23-27 bytes of JVM
+# heap per cell (measured after ``System.gc()`` on ten 100k-row frames,
+# Spark 4.1: 26 B/cell for int, float and short-string columns, 23
+# B/cell for all-float), so the cap holds about 100 MB of heap, plus the
+# Python snapshots (8 bytes a numeric cell, one pointer a string).
+_MAX_CELLS = 4_000_000
 
 
 # QueryExecutionException historically lived here; it now sits in the
@@ -155,18 +185,22 @@ class DataSource:
         no exchange and a pandas UDF over it runs one Python task.
         Larger frames, and any frame when the batch size is unlimited
         (``<= 0``), keep the partitions ``createDataFrame`` gives them.
-        A Spark DataFrame is rebound to this DataSource's session
-        (:func:`session.rebind`) and registered there."""
+
+        A pandas frame is converted once and reused while the frame
+        object is alive and unchanged: same column labels, dtypes and
+        values (``0.0`` and ``-0.0`` differ), on the same root session
+        (the session a ``sql_query`` child was cloned from), under the
+        same conversion confs.  One conversion is kept per frame, so
+        passing it on another root session or under other confs
+        converts it again and replaces the kept one.  Frames with
+        object cells other than ``str`` and missing values, and frames
+        above the cap of :data:`_MAX_CELLS` cells, are converted on
+        every call.  The relation, and a Spark DataFrame, is rebound to
+        this DataSource's session (:func:`session.rebind`) and
+        registered there."""
         if isinstance(df, pd.DataFrame):
-            per_batch = int(
-                self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-            )
-            small = len(df) <= per_batch
-            df = self.spark.createDataFrame(df)
-            if small:
-                df = df.coalesce(1)
-        else:
-            df = rebind(df, self.spark)
+            df = _pandas_relation(self.spark, df)
+        df = rebind(df, self.spark)
         df.createOrReplaceTempView(name)
         old = self._resolve_name(name)
         self.cache.evict(self.spark, old)
@@ -399,6 +433,133 @@ class DataSource:
         if reduce_output:
             return _reduce_output(pdf)
         return pdf
+
+
+def _pandas_relation(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """``pdf`` converted on ``spark``'s root session (the session a
+    one-shot child was cloned from): the relation :data:`_CONVERTED`
+    holds for it under the root's current conversion confs, else a
+    fresh conversion."""
+    root = getattr(spark, "_one_shot_parent", spark)
+    confs = tuple(root.conf.get(key) for key in _CONVERSION_CONFS)
+    per_batch = int(confs[_CONVERSION_CONFS.index(_MAX_RECORDS)])
+
+    def convert(frame: pd.DataFrame) -> DataFrame:
+        df = root.createDataFrame(frame)
+        return df.coalesce(1) if len(frame) <= per_batch else df
+
+    key = (root, tuple(str(c) for c in pdf.columns), confs)
+    return _CONVERTED.relation(pdf, key, convert)
+
+
+def _reusable(pdf: pd.DataFrame) -> bool:
+    """Whether a relation converted from ``pdf`` may be reused while
+    ``pdf`` equals a snapshot of it: every column is bool, numeric,
+    datetime, or an object column of ``str`` and missing values only.
+    Any other object cell (a ``list``, a ``dict``) can change in place
+    without the snapshot seeing it."""
+    for i, dtype in enumerate(pdf.dtypes):
+        if isinstance(dtype, pd.DatetimeTZDtype):
+            continue
+        if isinstance(dtype, np.dtype) and dtype.kind in "biufM":
+            continue
+        if dtype == object and pd.api.types.infer_dtype(
+            pdf.iloc[:, i], skipna=True
+        ) in ("string", "empty"):
+            continue
+        return False
+    return True
+
+
+class _Converted:
+    """One pandas frame's snapshot, taken when it was converted, and the
+    relation built from it under ``key`` (root session, column labels,
+    conversion confs)."""
+
+    __slots__ = ("ref", "snapshot", "signs", "key", "relation")
+
+    def __init__(self, ref: weakref.ref, snapshot: pd.DataFrame, key: tuple, relation: DataFrame):
+        self.ref = ref
+        self.snapshot = snapshot
+        # ``DataFrame.equals`` counts 0.0 and -0.0 as equal
+        self.signs = [
+            (i, np.signbit(snapshot.iloc[:, i].to_numpy()))
+            for i, dtype in enumerate(snapshot.dtypes)
+            if dtype.kind == "f"
+        ]
+        self.key = key
+        self.relation = relation
+
+    def matches(self, pdf: pd.DataFrame) -> bool:
+        """``pdf`` still has the snapshot's labels, dtypes and values."""
+        return pdf.equals(self.snapshot) and all(
+            np.array_equal(np.signbit(pdf.iloc[:, i].to_numpy()), signs)
+            for i, signs in self.signs
+        )
+
+
+class _ConvertedFrames:
+    """The Spark relations converted from live pandas frames, so a frame
+    passed again unchanged (``sql_query``, the ``.sql`` accessor, a
+    long-lived :class:`DataSource`) converts once.
+
+    An entry is keyed by the frame's ``id`` and checked with a weak
+    reference, so it never keeps a frame alive; entries whose frame was
+    collected go on the next lookup.  Each frame has one relation, for
+    the last root session and conversion confs it was used under, so a
+    frame keeps at most one root session reachable.  A relation is built
+    on a root session, never on a one-shot child, from the snapshot it
+    is checked against.  At most :data:`_MAX_CELLS` cells are kept.
+    Conversion and the value check run outside the lock; two threads
+    that miss at once both convert, and the later entry stays."""
+
+    def __init__(self, max_cells: int):
+        self.max_cells = max_cells
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[int, _Converted] = OrderedDict()
+
+    def relation(self, pdf: pd.DataFrame, key: tuple, convert) -> DataFrame:
+        """The relation ``convert`` builds from ``pdf``: the kept one
+        while it was built under ``key`` and ``pdf`` matches its
+        snapshot, else a new one."""
+        with self._lock:
+            self._purge()
+            entry = self._entries.get(id(pdf))
+        if entry is not None:
+            if entry.ref() is pdf and entry.key == key and entry.matches(pdf):
+                with self._lock:
+                    if self._entries.get(id(pdf)) is entry:
+                        self._entries.move_to_end(id(pdf))
+                return entry.relation
+            with self._lock:  # built under another key, or the frame changed
+                if self._entries.get(id(pdf)) is entry:
+                    del self._entries[id(pdf)]
+        if pdf.size > self.max_cells or not _reusable(pdf):
+            return convert(pdf)
+        snapshot = pdf.copy(deep=True)
+        entry = _Converted(weakref.ref(pdf), snapshot, key, convert(snapshot))
+        with self._lock:
+            self._entries[id(pdf)] = entry
+            self._entries.move_to_end(id(pdf))
+            cells = sum(e.snapshot.size for e in self._entries.values())
+            while cells > self.max_cells:
+                _, victim = self._entries.popitem(last=False)
+                cells -= victim.snapshot.size
+        return entry.relation
+
+    def entries(self) -> list[_Converted]:
+        with self._lock:
+            self._purge()
+            return list(self._entries.values())
+
+    def _purge(self) -> None:
+        """Drop the entries whose frame was collected (its ``id`` may
+        since name another frame)."""
+        for key in [k for k, e in self._entries.items() if e.ref() is None]:
+            del self._entries[key]
+
+
+_CONVERTED = _ConvertedFrames(_MAX_CELLS)
 
 
 def _path_size_bytes(path: str) -> int | None:

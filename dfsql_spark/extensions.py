@@ -125,7 +125,7 @@ except ImportError:
 
 # Spark-era mirror: the reference's "distributed pandas" was modin; on
 # Spark it's pandas-on-Spark (pyspark.pandas).  Same accessor surface,
-# but the data NEVER leaves the JVM: ``to_spark()`` hands over the
+# but the data NEVER leaves the JVM: ``spark.frame()`` hands over the
 # underlying Spark plan, the query composes onto it lazily, and the
 # result returns as pandas-on-Spark via ``pandas_api()``.
 try:
@@ -162,7 +162,7 @@ try:
             from . import _one_shot
             from .session import rebind
 
-            sdf = self._psdf.to_spark()
+            sdf = self._psdf.spark.frame()
             caller = sdf.sparkSession
             sql = maybe_add_from_to_query(sql, table_name=from_table)
             # the view lives in a one-shot child, as for sql_query, so

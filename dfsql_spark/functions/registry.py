@@ -169,9 +169,9 @@ class FunctionRegistry:
         return {k: rf.internal_name for k, rf in self.functions.items()}
 
     def drop_all(self) -> None:
-        """Remove this registry's functions from the session registry;
-        a one-shot ``sql_query`` calls it so its functions do not pile
-        up in a long-lived session."""
+        """Remove this registry's functions from the session registry,
+        so they do not pile up in a long-lived session.  A one-shot
+        ``sql_query`` needs no call: its functions go with its child."""
         for rf in self.functions.values():
             self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {rf.internal_name}")
         self.functions.clear()

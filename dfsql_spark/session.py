@@ -22,6 +22,7 @@ Scale knobs are environment-driven so the identical code runs on
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
 
@@ -214,10 +215,16 @@ def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
     tests/test_one_shot.py pins it."""
     if df.sparkSession is spark:
         return df
-    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        spark._jsparkSession, df._jdf.queryExecution().analyzed()
-    )
+    jdf = _of_rows(spark._jvm)(spark._jsparkSession, df._jdf.queryExecution().analyzed())
     return DataFrame(jdf, spark)
+
+
+@functools.lru_cache(maxsize=None)
+def _of_rows(jvm):
+    """``classic.Dataset.ofRows`` of the JVM behind ``jvm`` (one per
+    py4j gateway), looked up once: py4j resolves each part of a
+    qualified name, and the member, in a round trip of its own."""
+    return jvm.org.apache.spark.sql.classic.Dataset.ofRows
 
 
 def _scala_items(seq):

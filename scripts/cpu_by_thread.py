@@ -22,12 +22,22 @@ The JVM is started with ``-XX:-UseDynamicNumberOfCompilerThreads``, so
 compiler threads live for the whole run and their CPU is not lost when
 an idle one exits.  Compare runs of this script with each other, not
 with plain run.py runs.
+
+``--jit-log`` (not passed on to run.py) also starts the JVM with
+``-XX:+UnlockDiagnosticVMOptions -XX:+LogCompilation``, the log under
+run.py's output dir (``.perfbench_out/``; about 200 MB for
+catalog_session; HotSpot keeps each compiler thread's part in the temp
+dir until the JVM exits).  After the JVM exits, one more JSON line
+gives the JIT compile seconds of the tasks that started inside the
+window, for C1 and C2: in total, by package (first five name parts)
+and for the top methods.  The log is deleted after parsing.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 from collections import defaultdict
 
@@ -39,6 +49,8 @@ import run  # noqa: E402
 
 _HZ = os.sysconf("SC_CLK_TCK")
 _JIT_FLAG = "-XX:-UseDynamicNumberOfCompilerThreads"
+_JIT_LOG_FLAGS = "-XX:+UnlockDiagnosticVMOptions -XX:+LogCompilation -XX:LogFile={}"
+_TOP = 15
 # (thread-name prefix, kind); Linux truncates names to 15 characters
 _JVM_THREADS = (
     ("C2 CompilerThre", "jvm_c2_compiler"),
@@ -99,7 +111,57 @@ def _snapshot() -> dict:
             snap["python_workers"] += _cpu_s(stat[1]) + _cpu_s(stat[1], reaped_children=True)
     compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
     snap["compiles"] = compiles.METRIC_COMPILATION_TIME().getCount()
+    # seconds since JVM start, the clock of LogCompilation's stamps
+    runtime = sc._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    snap["jvm_uptime_s"] = runtime.getUptime() / 1000.0
     return snap
+
+
+_ATTR = re.compile(r"(\w+)='([^']*)'")
+
+
+def _jit_window(log_path: str, start_s: float, end_s: float) -> dict:
+    """C1 and C2 compile seconds of the tasks in a LogCompilation log
+    that started between ``start_s`` and ``end_s`` (JVM uptime): total,
+    by package and by method."""
+    total: dict[str, float] = defaultdict(float)
+    by_package: dict[str, dict[str, float]] = defaultdict(lambda: defaultdict(float))
+    by_method: dict[tuple[str, str], float] = defaultdict(float)
+    tasks: dict[str, int] = defaultdict(int)
+    kind, task = None, None
+    with open(log_path, errors="replace") as f:
+        for line in f:
+            if line.startswith("<start_compile_thread "):
+                name = dict(_ATTR.findall(line)).get("name", "")
+                kind = "c2" if name.startswith("C2") else "c1" if name.startswith("C1") else None
+            elif line.startswith("<task "):
+                attrs = dict(_ATTR.findall(line))
+                task = (attrs.get("method", "?"), float(attrs.get("stamp", -1)))
+            elif line.startswith("<task_done ") and task is not None and kind is not None:
+                method, started = task
+                task = None
+                if not start_s <= started <= end_s:
+                    continue
+                seconds = float(dict(_ATTR.findall(line)).get("stamp", started)) - started
+                # a lambda's hidden class ends in "/0x<address>"
+                owner = method.split(" ")[0].split("/0x")[0].replace("/", ".")
+                package = ".".join(owner.split(".")[:-1][:5]) or "(default)"
+                total[kind] += seconds
+                tasks[kind] += 1
+                by_package[kind][package] += seconds
+                by_method[(kind, method)] += seconds
+
+    def top(items):
+        return [[k, round(v, 2)] for k, v in sorted(items, key=lambda kv: -kv[1])[:_TOP]]
+
+    return {
+        "jit_window_s": {k: round(v, 2) for k, v in sorted(total.items())},
+        "jit_window_tasks": dict(sorted(tasks.items())),
+        "jit_s_by_package": {k: top(v.items()) for k, v in sorted(by_package.items())},
+        "jit_top_methods": [
+            [kind, method, s] for (kind, method), s in top(by_method.items())
+        ],
+    }
 
 
 def _window(start: dict, end: dict) -> dict:
@@ -115,6 +177,9 @@ def _window(start: dict, end: dict) -> dict:
 
 
 def main(argv: list[str]) -> int:
+    jit_log = "--jit-log" in argv
+    argv = [a for a in argv if a != "--jit-log"]
+    log_path = None
     edges: list[dict] = []
     tree_cpu_s = procstat.tree_cpu_s
 
@@ -132,12 +197,18 @@ def main(argv: list[str]) -> int:
     environment = run._environment
 
     def with_jit_flag(workdir: str) -> None:
+        nonlocal log_path
         environment(workdir)
         args = os.environ["PYSPARK_SUBMIT_ARGS"]
         if "-XX:-UsePerfData" not in args:
             raise RuntimeError("run.py's JVM options changed; update cpu_by_thread.py")
+        flags = _JIT_FLAG
+        if jit_log:
+            # run.py deletes ``workdir`` when the run ends; its parent stays
+            log_path = os.path.join(os.path.dirname(workdir), f"jit-{os.getpid()}.log")
+            flags += " " + _JIT_LOG_FLAGS.format(log_path)
         os.environ["PYSPARK_SUBMIT_ARGS"] = args.replace(
-            "-XX:-UsePerfData", f"-XX:-UsePerfData {_JIT_FLAG}"
+            "-XX:-UsePerfData", f"-XX:-UsePerfData {flags}"
         )
 
     procstat.tree_cpu_s = window_edge
@@ -156,6 +227,13 @@ def main(argv: list[str]) -> int:
             }
         )
     )
+    if log_path is not None:
+        # run.py has stopped the JVM, which merged its compiler threads' logs
+        try:
+            print(json.dumps(_jit_window(log_path, start["jvm_uptime_s"], end["jvm_uptime_s"])))
+        finally:
+            if os.path.exists(log_path):
+                os.remove(log_path)
     return status
 
 

@@ -7,6 +7,7 @@ collapse, and custom functions through the accessor.
 
 import sys
 import threading
+import warnings
 
 import pandas as pd
 import pytest
@@ -117,6 +118,16 @@ class TestPandasOnSparkAccessor:
     def test_reduce_output_opt_in(self, spark):
         psdf = self._psdf(spark)
         assert psdf.sql("SELECT SUM(a) AS s", reduce_output=True) == 10
+
+    def test_call_emits_no_advice_warning(self, spark):
+        from pyspark.pandas.utils import PandasAPIOnSparkAdviceWarning
+
+        psdf = self._psdf(spark)
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.simplefilter("always")
+            out = psdf.sql("SELECT a WHERE a > 2")
+        assert [w for w in seen if issubclass(w.category, PandasAPIOnSparkAdviceWarning)] == []
+        assert sorted(out.to_pandas()["a"]) == [3, 4]
 
     def test_temp_view_not_leaked(self, spark):
         psdf = self._psdf(spark)

@@ -7,10 +7,12 @@ partition, so GROUP BY / HAVING / ORDER BY over it plan no exchange.
 ``DataSource.query`` runs each SELECT in a per-query child session,
 interpreted when every leaf of its plan has a known row count of at
 most ``INTERPRETED_MAX_ROWS`` (a pandas frame, or a cached table after
-its first scan), so it compiles no class.  These tests count Spark
-jobs and tasks with ``setJobGroup`` + ``statusTracker()``, and Janino
-compiles with Spark's ``CodegenMetrics``, so a plan regression fails
-here instead of hiding in wall-clock noise.
+its first scan), so it compiles no class.  A pandas frame passed
+again unchanged is converted once, and any change to it is seen on
+the next call.  These tests count Spark jobs and tasks with
+``setJobGroup`` + ``statusTracker()``, and Janino compiles with
+Spark's ``CodegenMetrics``, so a plan regression fails here instead
+of hiding in wall-clock noise.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import itertools
 import sys
 import threading
 import time
+import weakref
 from decimal import Decimal
 
 import numpy as np
@@ -35,7 +38,7 @@ from pyspark.sql.catalog import Catalog
 from pyspark.sql.conf import RuntimeConfig
 
 import dfsql_spark
-from dfsql_spark import AggregateFunction, DataSource, QueryExecutionException, sql_query
+from dfsql_spark import AggregateFunction, DataSource, QueryExecutionException, datasource, sql_query
 from dfsql_spark.datasource import _clean_name, _reduce_output
 from dfsql_spark.session import (
     INTERPRETED_CONFS,
@@ -835,6 +838,8 @@ def test_child_sessions_are_freed_soon_after_the_call(
             break
         time.sleep(0.5)
     assert alive == 0
+    relations = [e.relation for e in datasource._CONVERTED.entries()]
+    assert not any(hasattr(df.sparkSession, "_one_shot_parent") for df in relations)
 
 
 @pytest.fixture()
@@ -898,3 +903,271 @@ def test_matching_case_sensitivity_writes_no_conf(spark, people, conf_writes):
         sql_query("SELECT COUNT(*) AS n FROM t", t=people, ds_kwargs={"case_sensitive": case_sensitive})
         assert [w for w in conf_writes if w[1] == "spark.sql.caseSensitive"] == sensitivity
         assert not any(on_caller for on_caller, _ in conf_writes)
+
+
+# --- converted-frame reuse -------------------------------------------
+
+
+@pytest.fixture()
+def conversions(monkeypatch):
+    """The pandas frames passed to ``SparkSession.createDataFrame``."""
+    frames = []
+    real = SparkSession.createDataFrame
+
+    def record(self, data, *args, **kwargs):
+        if isinstance(data, pd.DataFrame):
+            frames.append(data)
+        return real(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", record)
+    return frames
+
+
+def _fresh_frame(n=60):
+    return pd.DataFrame(
+        {
+            "id": np.arange(n, dtype="int64"),
+            "grp": [f"g{i % 4}" for i in range(n)],
+            "score": np.arange(n, dtype="float64") / 4.0,
+        }
+    )
+
+
+def _entry(frame):
+    """The registry entry of ``frame``, or None."""
+    found = [e for e in datasource._CONVERTED.entries() if e.ref() is frame]
+    return found[0] if found else None
+
+
+def test_unchanged_frame_converts_once(spark, conversions):
+    frame = _fresh_frame()
+    for k in range(4):
+        got = sql_query(f"SELECT COUNT(*) AS n FROM t WHERE id >= {k}", t=frame)
+        assert got == len(frame) - k
+        assert frame.sql(f"SELECT MAX(score) AS hi WHERE id < {k + 1}") == k / 4.0
+    ds = DataSource(spark=spark, cache=False)
+    ds.add_table("conv_once", frame)
+    try:
+        assert ds.query("SELECT SUM(id) AS s FROM conv_once") == frame["id"].sum()
+    finally:
+        ds.drop_table("conv_once")
+    assert len(conversions) == 1
+
+
+def _star(spark, frame):
+    """``SELECT *`` over ``frame`` through ``sql_query``, and a fresh
+    conversion of it."""
+    return sql_query("SELECT * FROM t", t=frame), spark.createDataFrame(frame).toPandas()
+
+
+def _edit_cell(f):
+    f.loc[3, "score"] = 99.5
+
+
+def _edit_string_cell(f):
+    f.loc[2, "grp"] = "zz"
+
+
+def _add_column(f):
+    f["extra"] = f["id"] * 2
+
+
+def _rename_column(f):
+    f.rename(columns={"score": "points"}, inplace=True)
+
+
+def _drop_column(f):
+    f.drop(columns=["grp"], inplace=True)
+
+
+def _change_dtype(f):
+    f["id"] = f["id"].astype("float64")
+
+
+def _negate_zero(f):
+    f.loc[0, "score"] = -0.0
+
+
+@pytest.mark.parametrize(
+    "change",
+    [_edit_cell, _edit_string_cell, _add_column, _rename_column, _drop_column, _change_dtype,
+     _negate_zero],
+    ids=lambda fn: fn.__name__.lstrip("_"),
+)
+def test_changed_frame_is_seen_on_the_next_call(spark, change):
+    frame = _fresh_frame()
+    got, expected = _star(spark, frame)
+    pd.testing.assert_frame_equal(got, expected)
+    change(frame)
+    got, expected = _star(spark, frame)
+    pd.testing.assert_frame_equal(got, expected)
+    pd.testing.assert_frame_equal(got, frame, check_dtype=False)
+    if "score" in frame:  # the sign of a zero shows in its text
+        text = sql_query("SELECT CAST(score AS STRING) AS s FROM t WHERE id = 0", t=frame)
+        assert text == str(frame.loc[0, "score"])
+
+
+@pytest.mark.parametrize("first, then", [("ints", "text"), ("text", "ints")])
+def test_object_ints_and_text_never_match(spark, first, then):
+    values = {"ints": [1, 2, 3], "text": ["1", "2", "3"]}
+    frame = pd.DataFrame({"code": pd.Series(values[first], dtype=object)})
+    for kind in (first, then):
+        frame["code"] = pd.Series(values[kind], dtype=object)
+        got = sql_query("SELECT typeof(code) AS t, MAX(code) AS m FROM t GROUP BY 1", t=frame)
+        assert got["t"].tolist() == ["bigint" if kind == "ints" else "string"]
+        assert got["m"].tolist() == [3 if kind == "ints" else "3"]
+
+
+def test_batch_size_change_between_calls_on_one_frame(spark, people, batch_rows):
+    """The partition counts of the one-batch tests above, on one frame."""
+    frame = people.copy()
+    default = int(spark.conf.get(MAX_RECORDS))
+    ds = DataSource(spark=spark, cache=False)
+    try:
+        for per_batch in (default, 400, len(frame), 10, 0, len(frame) - 1, -1, default):
+            batch_rows(per_batch)
+            ds.add_table("batch_change", frame)
+            if per_batch >= len(frame):
+                expected = 1
+            else:
+                expected = spark.createDataFrame(frame).rdd.getNumPartitions()
+            assert _partitions(spark, "batch_change") == expected
+    finally:
+        spark.catalog.dropTempView("batch_change")
+
+
+@pytest.fixture()
+def time_zone(spark):
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    yield lambda tz: spark.conf.set("spark.sql.session.timeZone", tz)
+    spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_time_zone_change_between_calls(spark, time_zone):
+    frame = pd.DataFrame({"ts": pd.to_datetime(["2024-01-15 12:00", "2024-07-01 08:30"])})
+    for tz in ("UTC", "America/New_York", "Asia/Tokyo", "UTC"):
+        time_zone(tz)
+        got = sql_query("SELECT CAST(ts AS BIGINT) AS s FROM t", t=frame)
+        # a naive pandas timestamp is a wall-clock time in the session zone
+        local = frame["ts"].dt.tz_localize(tz)
+        assert got.tolist() == [int(t.timestamp()) for t in local]
+        fresh = spark.createDataFrame(frame).selectExpr("CAST(ts AS BIGINT) AS s")
+        assert got.tolist() == [r.s for r in fresh.collect()]
+
+
+def test_one_frame_under_two_names_self_joins(spark, conversions):
+    frame = _fresh_frame()
+    got = sql_query(
+        "SELECT t.id, u.score FROM t JOIN u ON t.id = u.id + 1 ORDER BY t.id", t=frame, u=frame
+    )
+    shifted = frame.assign(id=frame["id"] + 1)
+    expected = frame[["id"]].merge(shifted[["id", "score"]], on="id").sort_values("id")
+    pd.testing.assert_frame_equal(got, expected.reset_index(drop=True))
+    assert len(conversions) == 1
+
+
+def test_new_session_is_not_served_another_sessions_relation(spark, monkeypatch, conversions):
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)  # each session constructor rebinds it
+    other = spark.newSession()
+    frame = _fresh_frame()
+    try:
+        for k in range(2):
+            for session in (spark, other):
+                got = sql_query(f"SELECT SUM(id) AS s FROM t WHERE id >= {k}", spark=session, t=frame)
+                assert got == frame["id"][k:].sum()
+                assert conversions[-1] is _entry(frame).snapshot  # converted afresh
+                assert _entry(frame).relation.sparkSession is session
+    finally:
+        activate(spark)
+    assert len(conversions) == 4
+
+
+def test_new_session_used_once_is_freed_while_the_frame_lives(spark):
+    to_df = RDD.toDF
+    other = spark.newSession()
+    RDD.toDF = to_df  # the constructor bound it to ``other``
+    frame = _fresh_frame()
+    try:
+        assert sql_query("SELECT COUNT(*) AS n FROM t", spark=other, t=frame) == len(frame)
+    finally:
+        activate(spark)
+    assert sql_query("SELECT COUNT(*) AS n FROM t", t=frame) == len(frame)
+    assert _entry(frame).relation.sparkSession is spark
+    ref = weakref.ref(other)
+    jref = spark._jvm.java.lang.ref.WeakReference(other._jsparkSession)
+    del other
+    deadline = time.monotonic() + POOL_KEEP_ALIVE_S + 15
+    while True:
+        gc.collect()
+        spark._jvm.java.lang.System.gc()
+        if (ref() is None and jref.get() is None) or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert ref() is None
+    assert jref.get() is None
+
+
+def test_collected_frame_leaves_the_registry(spark):
+    frame = _fresh_frame()
+    sql_query("SELECT COUNT(*) AS n FROM t", t=frame)
+    frame.sql("SELECT COUNT(*) AS n")  # the cached accessor makes a reference cycle
+    entry = _entry(frame)
+    assert entry is not None
+    del frame
+    gc.collect()
+    assert all(e is not entry for e in datasource._CONVERTED.entries())
+
+
+def test_cell_cap_evicts_least_recently_used(spark, monkeypatch, conversions):
+    frames = [_fresh_frame(50 + i) for i in range(5)]  # 150-162 cells each
+    registry = datasource._ConvertedFrames(max_cells=500)
+    monkeypatch.setattr(datasource, "_CONVERTED", registry)
+
+    def run(frame):
+        assert sql_query("SELECT COUNT(*) AS n FROM t", t=frame) == len(frame)
+
+    for frame in frames[:3]:
+        run(frame)
+    run(frames[0])  # most recently used now
+    run(frames[3])  # over the cap: frames[1] goes
+    assert [e.ref() for e in registry.entries()] == [frames[2], frames[0], frames[3]]
+    assert len(conversions) == 4
+    run(frames[1])
+    assert len(conversions) == 5
+    big = _fresh_frame(200)  # 600 cells: above the cap, never kept
+    run(big)
+    run(big)
+    assert len(conversions) == 7
+    assert all(e.ref() is not big for e in registry.entries())
+
+
+@pytest.mark.parametrize("shared", [True, False], ids=["one_frame", "two_frames"])
+def test_concurrent_calls_on_frames_get_their_own_results(spark, shared):
+    frames = [_fresh_frame(400)] * 2 if shared else [_fresh_frame(400), _fresh_frame(300)]
+    start = threading.Barrier(len(frames))
+    errors = []
+
+    def loop(k, frame):
+        try:
+            start.wait(60)
+            for i in range(6):
+                cut = 10 * i + k
+                got = sql_query(f"SELECT COUNT(*) AS n, SUM(score) AS s FROM t WHERE id >= {cut}", t=frame)
+                sel = frame[frame["id"] >= cut]
+                assert got["n"].tolist() == [len(sel)]
+                assert got["s"].tolist() == pytest.approx([sel["score"].sum()])
+        except (Exception, pytest.fail.Exception) as e:  # reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=loop, args=(k, f)) for k, f in enumerate(frames)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for thread in threads:
+            thread.start()
+        for thread in threads:
+            thread.join(300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(thread.is_alive() for thread in threads)
+    assert errors == []
