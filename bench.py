@@ -19,22 +19,19 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # the representative mix: scan-heavy agg, multi-join, window, dedup
-# (exact + sketch), similarity, text, sessionization, streaming-batch.
-# Round 6 adds the shuffle-bearing round-5 operators (VERDICT r5 item
-# 4) so their perf trend is visible: decontamination gram join (d07),
-# vocabulary agg (t07), applyInPandas sequence packing (t09) — and the
-# round-6 operators: salted skew join (sk02), C4 filters (t12), mix
-# rebalance (t13), winnowing (t14), PQ ANN (s04), media dedup (m03),
-# dedup survivors (d09, cheap here because it reuses d02's shared
-# shingle persist — the same reuse the driver run gets), line dedup
-# (d11), and BM25 retrieval (s05).  p01 (the end-to-end curation
-# capstone: C4 filters + repetition + dedup survivors + PII scrub in
-# ONE plan) joins in round 6 so the composed-pipeline cost has a
-# trend, not just its parts.  d08's CONTRACT entry is deliberately
-# NOT benched (its wall is ~95% the all-pairs exact ground truth, a
-# toy-scale grading device); round 9 adds b_d08_semantic_dedup_op, a
-# bench-only run of the operator alone, so the operator has a trend
-# without timing the harness.
+# (exact + sketch), similarity, text, sessionization, streaming-batch,
+# and the shuffle-bearing operators: decontamination gram join (d07),
+# vocabulary agg (t07), applyInPandas sequence packing (t09), salted
+# skew join (sk02), C4 filters (t12), mix rebalance (t13), winnowing,
+# PQ ANN (s04), media dedup, dedup survivors (cheap here because it
+# reuses d02's shared shingle persist), line dedup (d11), and BM25
+# retrieval (s05).  p01 (the end-to-end curation capstone: C4 filters
+# + repetition + dedup survivors + PII scrub in ONE plan) gives the
+# composed pipeline a trend, not just its parts.  d08's CONTRACT entry
+# is deliberately NOT benched (its wall is ~95% the all-pairs exact
+# ground truth, a toy-scale grading device); b_d08_semantic_dedup_op
+# is a bench-only run of the operator alone, so the operator has a
+# trend without timing the harness.
 HEADLINE = [
     "q06_groupby_agg",
     "q22_flagship_revenue",
@@ -44,10 +41,7 @@ HEADLINE = [
     "d02_dedup_ngram_jaccard",
     "d03_dedup_minhash_lsh",
     "d07_decontaminate",
-    # d09 left the contract in the round-15 swap; same plan, same
-    # trend, now timed as the bench extra b_dedup_survivors (trend
-    # readers: b_dedup_survivors in r15+ == d09_dedup_survivors in
-    # r1-r14)
+    # bench extra running d09_dedup_survivors
     "b_dedup_survivors",
     "d11_line_dedup",
     "s01_sim_topk",
@@ -60,19 +54,15 @@ HEADLINE = [
     "t09_pack_sequences",
     "t12_c4_filters",
     "t13_mix_rebalance",
-    # t14 left the contract in the round-13 swap; same plan, same
-    # trend, now timed as the bench extra b_winnow_fingerprints
-    # (trend readers: b_winnow_fingerprints in r13+ ==
-    # t14_winnow_fingerprints in r6-r12)
+    # bench extra running t14_winnow_fingerprints
     "b_winnow_fingerprints",
-    # m03 left the contract in the round-15 swap; trend continues as
-    # the bench extra b_media_dedup (== m03_media_dedup in r1-r14)
+    # bench extra running m03_media_dedup
     "b_media_dedup",
     "p01_curation_pipeline",
     "e01_windowed_counts",
     "e02_sessionize",
-    # round-8 contract promotions with a meaningful per-round perf
-    # trend: hashed embeddings (two combined shuffles), LM scoring
+    # entries with a meaningful perf trend: hashed embeddings (two
+    # combined shuffles), LM scoring
     # (broadcast model + exploded bigram map), BPE pair counts
     # (pair-vocabulary shuffle), quality checks (single-scan suite).
     # d12/d14 are deliberately NOT benched: at bench sf their wall is
@@ -80,18 +70,15 @@ HEADLINE = [
     # CC/sketch overhead (the toy-scale grading device), which would
     # bench the harness, not the operator — same reasoning as d08.
     "t17_hashed_embeddings",
-    # t19 left the contract in the round-12 swap; same plan, same
-    # trend, now timed as the bench extra b_lm_score (trend readers:
-    # b_lm_score in r12+ == t19_lm_score in r8-r11)
+    # bench extra running t19_lm_score
     "b_lm_score",
     "t22_bpe_pair_counts",
     "x05_quality_checks",
     # bench-only variants (em.bench_extras(), not contract queries):
     # the semantic-dedup OPERATOR without d08's exact ground-truth
-    # grading device (round-8 verdict ask — the operator finally has a
-    # perf trend while the contract entry stays correctness-only),
-    # plus the round-9 library operators (salted per-key cap,
-    # Misra-Gries heavy hitters, BPE encode over a memoized merge
+    # grading device (the contract entry stays correctness-only),
+    # plus library operators (salted per-key cap, Misra-Gries heavy
+    # hitters, BPE encode over a memoized merge
     # list) so their perf has a trend despite the saturated contract.
     "b_d08_semantic_dedup_op",
     "b_cap_per_key",
@@ -100,44 +87,41 @@ HEADLINE = [
     "b_substring_dedup",
     "b_crawl_frontend",
     "b_dsir",
-    # round-10: the rollup family gets a trend (verdict r9 ask #8) —
-    # the GROUPING-SETS one-scan rollup and the rewritten single-pass
-    # funnel (the old O(K²) join chain was the round-9 `weak`)
+    # the rollup family: the GROUPING-SETS one-scan rollup and the
+    # single-pass funnel (the old join chain paid O(K²) scans)
     "b_time_rollup",
     "b_event_funnel",
     "b_cluster_sample",
     "b_upsample_mix",
     "b_token_budget",
-    # round-11: the new library operators get a trend — keyword
-    # extraction (corpus-sized (doc,term) shuffle), the one-agg HLL
-    # column profile over the largest table, and the exact
-    # source-overlap matrix (distinct + hash self-join)
+    # library operators: keyword extraction (corpus-sized (doc,term)
+    # shuffle), the one-agg HLL column profile over the largest table,
+    # and the exact source-overlap matrix (distinct + hash self-join)
     "b_tfidf_terms",
     "b_column_profile",
     "b_source_overlap",
-    # round-12: the MinHash-LSH operator gets a trend without d03's
-    # exact-ground-truth grading device (the b_d08 pattern)
+    # the MinHash-LSH operator without d03's exact-ground-truth
+    # grading device (the b_d08 pattern)
     "b_minhash_op",
-    # round-13: PSI distribution drift between snapshots (two-side
-    # histogram construction over the corpus)
+    # PSI distribution drift between snapshots (two-side histogram
+    # construction over the corpus)
     "b_distribution_drift",
-    # round-14 contract promotions with a per-round trend: the
-    # coverage-curve histogram walk and the packing waste card (its
-    # wall includes replaying t09's applyInPandas packing — the report
-    # itself is a thin (shard, seq) agg + one-row rollup).
+    # the coverage-curve histogram walk and the packing waste card
+    # (its wall includes replaying t09's applyInPandas packing — the
+    # report itself is a thin (shard, seq) agg + one-row rollup).
     # x08's operator trend continues as b_distribution_drift (same
     # plan; the contract entry differs only in the mutation inputs).
     "t28_vocab_coverage",
     "t29_packing_report",
-    # round-14 session additions: the iterative link-graph ranking
-    # (5 fixed rounds over a corpus-sized edge list) and the
-    # content-id assign + collision/fragmentation audit
+    # the iterative link-graph ranking (5 fixed rounds over a
+    # corpus-sized edge list) and the content-id assign +
+    # collision/fragmentation audit
     "b_pagerank",
     "b_stable_ids",
     "b_robots",
-    # round-15 contract promotions with a corpus-scale perf trend:
-    # the md5 id-assign + collision audit (x09), the link-graph data
-    # card (one edge-dedup shuffle + reversed-edge semi-join), and
+    # entries with a corpus-scale perf trend: the md5 id-assign +
+    # collision audit (x09), the link-graph data card (one edge-dedup
+    # shuffle + reversed-edge semi-join), and
     # the window-function SQL path (one Window exchange shared by
     # three window specs).  w04 (toy-graph pagerank arithmetic) and
     # w05 (fixture-sized WET parse) are correctness devices — their
@@ -149,13 +133,13 @@ HEADLINE = [
 
 
 def main() -> None:
-    # SOLE-JSON-LINE CONTRACT (verdict r12 ask #6): the driver parses
-    # stdout as one JSON line, but the JVM writes its own startup
-    # noise ("WARNING: Using incubator modules", log4j bootstrap) to
-    # FD 1 before log levels apply — Python-level sys.stdout games
-    # can't intercept that.  Re-point FD 1 at stderr for the whole
-    # run and keep a private dup of the real stdout for the final
-    # JSON, so the gate line is the ONLY byte stream the driver sees.
+    # SOLE-JSON-LINE CONTRACT: stdout is parsed as one JSON line, but
+    # the JVM writes its own startup noise ("WARNING: Using incubator
+    # modules", log4j bootstrap) to FD 1 before log levels apply —
+    # Python-level sys.stdout games can't intercept that.  Re-point
+    # FD 1 at stderr for the whole run and keep a private dup of the
+    # real stdout for the final JSON, so the gate line is the ONLY
+    # byte stream on stdout.
     json_fd = os.dup(1)
     os.dup2(2, 1)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -167,16 +151,15 @@ def main() -> None:
 
     # bench-harness opt-in: bench-SF shuffle volumes are MBs, and
     # tmpfs beats the (virtualized) disk ~15× on small block files —
-    # without this, intermittent disk stalls dominated the medians
-    # (round-10 instrument diagnosis in PROGRESS.jsonl); deliberately
-    # NOT a library default (see dfsql_spark/session.py).
-    # CAPACITY GUARD (round-11 lesson): tmpfs pages are RAM — the
-    # first sf1 run piled 88 GB of shuffle scratch into /dev/shm and
-    # the kernel OOM-killed the JVM mid-suite.  Gate the opt-in on
+    # without this, intermittent disk stalls dominated the medians;
+    # deliberately NOT a library default (see dfsql_spark/session.py).
+    # CAPACITY GUARD: tmpfs pages are RAM — the first sf1 run piled
+    # 88 GB of shuffle scratch into /dev/shm and the kernel
+    # OOM-killed the JVM mid-suite.  Gate the opt-in on
     # the SOURCE dataset size (shuffle volume scales with it): past
     # ~64 MB of parquet the suite belongs on disk.
     def _dataset_mb(d: str) -> float:
-        # *.parquet entries can be single files (driver testdata) or
+        # *.parquet entries can be single files (testdata) or
         # Spark-written directories (make_scale_data output) — walk both
         try:
             total = 0
@@ -224,11 +207,11 @@ def main() -> None:
             )
 
     # Median of 3 INTERLEAVED suite passes: single-shot timings showed
-    # ±3-4x swings on untouched code (round 7), too noisy to gate on.
+    # ±3-4x swings on untouched code, too noisy to gate on.
     # release_caches() between passes drops the entry module's shared
     # persists (shingle sets, exact-pair ground truth) so every pass
-    # pays the same cold cost a driver run pays — within a pass the
-    # d02->d09 persist reuse is preserved, exactly like the driver.
+    # pays the same cold cost — within a pass the d02->d09 persist
+    # reuse is preserved.
     REPS = 3
 
     def read_cpu_stat():
@@ -260,21 +243,17 @@ def main() -> None:
 
     medians = {n: round(median3(ts), 3) for n, ts in per_rep.items()}
     median_total = round(sum(medians.values()), 3)
-    # HEADLINE AGGREGATE = MIN (round-12, verdict r11 ask #6): the
-    # per-query minimum over the interleaved passes is the number a
-    # one-sided host stall cannot inflate — r9's "regressions" were
-    # pure steal-time artifacts on unchanged plans, and every round
-    # since has adjudicated medians-vs-mins by hand.  From r12 on,
+    # HEADLINE AGGREGATE = MIN: the per-query minimum over the
+    # interleaved passes is the number a one-sided host stall cannot
+    # inflate (steal-time "regressions" on unchanged plans were seen).
     # "value" and "queries" ARE the mins; medians stay as secondary
-    # fields for spread diagnosis.  Trend readers comparing r12+
-    # against r1-r11 BENCH files should compare against those files'
-    # "mins"/"min_total" fields (recorded since r10), not "queries".
+    # fields for spread diagnosis.
     timings = {n: round(min(ts), 3) for n, ts in per_rep.items()}
     total = round(sum(timings.values()), 3)
-    # environment self-diagnosis (round-10 lesson: the r9 driver run's
-    # medians were host-stall artifacts — spreads to 28s on unchanged
-    # plans): CPU-steal fraction over the run and the per-query MIN,
-    # which one-sided stalls cannot inflate.  A reader should trust
+    # environment self-diagnosis (medians have been host-stall
+    # artifacts — spreads to 28s on unchanged plans): CPU-steal
+    # fraction over the run and the per-query MIN, which one-sided
+    # stalls cannot inflate.  A reader should trust
     # "mins" over "queries" whenever steal_pct is high or spreads are
     # multi-second on map-only queries.
     cpu1 = read_cpu_stat()
@@ -287,8 +266,8 @@ def main() -> None:
         load1 = round(os.getloadavg()[0], 2)
     except OSError:
         load1 = None
-    # min-vs-median divergence (advisor r12): min is the stall-proof
-    # statistic but the most optimistic one — a change that adds
+    # min-vs-median divergence: min is the stall-proof statistic but
+    # the most optimistic one — a change that adds
     # variance or cache pressure shows in medians first.  Surface the
     # gap explicitly so a widening spread is itself an alert, and give
     # trend readers both aggregates in one field.
@@ -298,19 +277,16 @@ def main() -> None:
         if medians[n] - timings[n] > max(0.15, 0.25 * timings[n])
     }
     env = {
-        # local_dir records WHERE shuffle scratch lived for this
-        # series (round-10 advisor): the tmpfs switch in round 10 is
-        # a measurement-environment discontinuity vs the r1-r9 BENCH
-        # files recorded on the virtualized disk — trend readers
-        # comparing across that boundary should know small-block
-        # shuffle I/O got ~15x faster independent of any plan change.
+        # local_dir records WHERE shuffle scratch lived: small-block
+        # shuffle I/O on tmpfs is ~15x faster than on the virtualized
+        # disk, independent of any plan change.
         "steal_pct": steal_pct,
         "load1_end": load1,
         "local_dir": os.environ.get("SPARK_GRAFT_LOCAL_DIR", "spark-default"),
-        # core-width self-certification (round-16, verdict r15 ask #2):
-        # the RESOLVED master string and the JVM's own parallelism, so a
-        # scaling-run reader can verify $SPARK_GRAFT_CPUS was honored
-        # from the output alone instead of auditing the session wiring.
+        # core-width self-certification: the RESOLVED master string and
+        # the JVM's own parallelism, so a scaling-run reader can verify
+        # $SPARK_GRAFT_CPUS was honored from the output alone instead of
+        # auditing the session wiring.
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
     }
@@ -332,8 +308,7 @@ def main() -> None:
         },
         "medians": medians,
         "median_total": median_total,
-        # kept for cross-round tooling that reads "mins"
-        # (identical to "queries" from r12 on)
+        # identical to "queries"
         "mins": timings,
         "min_total": total,
         # queries whose median exceeds their min by >0.15s AND
@@ -342,26 +317,26 @@ def main() -> None:
         "min_median_divergence": divergence,
         "env": env,
     }
-    # FULL payload goes to a sidecar file (round-14, verdict r13 ask
-    # #3): the driver captures only the LAST 2000 chars of stdout, so
-    # the old ~3.4 KB gate line arrived head-truncated and never
-    # parsed.  The sidecar keeps every per-round diagnostic map; the
-    # round snapshot copies it to BENCH_rN_builder.json.
+    # FULL payload goes to a sidecar file under the ignored
+    # .benchmarks/: a stdout reader that keeps only the LAST 2000
+    # chars would head-truncate a ~3.4 KB line, so it would never
+    # parse.  The sidecar keeps every diagnostic map.
+    sidecar_rel = os.path.join(".benchmarks", "bench_full_latest.json")
     sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_full_latest.json"
+        os.path.dirname(os.path.abspath(__file__)), sidecar_rel
     )
+    os.makedirs(os.path.dirname(sidecar), exist_ok=True)
     with open(sidecar, "w") as f:
         json.dump(full_payload, f, indent=1)
         f.write("\n")
     # the one write to the REAL stdout (see the dup2 at the top of
     # main) — a COMPACT line (<1.5 KB: headline min aggregate, the
     # full 3-dp per-query min map, median total, divergence count,
-    # env) so the driver's tail capture holds the whole JSON object.
-    # SIZE GUARD (round-14 review): the per-query map grows 1-2
-    # entries per round; if the line ever approaches the driver's
-    # 2000-char tail capture, degrade deterministically — 2-dp
-    # timings first, then drop the map entirely (it lives in the
-    # sidecar either way) — rather than head-truncate and reintroduce
+    # env) so a 2000-char tail capture holds the whole JSON object.
+    # SIZE GUARD: if the line ever approaches that 2000-char tail
+    # capture, degrade deterministically — 2-dp timings first, then
+    # drop the map entirely (it lives in the sidecar either way) —
+    # rather than head-truncate and reintroduce
     # the never-parses failure this line exists to fix.
     def gate_line(qmap) -> str:
         return json.dumps(
@@ -376,7 +351,7 @@ def main() -> None:
                 "median_total": median_total,
                 "divergence_n": len(divergence),
                 "env": env,
-                "full": "bench_full_latest.json",
+                "full": sidecar_rel,
             },
             separators=(",", ":"),
         )

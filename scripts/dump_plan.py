@@ -2,7 +2,7 @@
 """Dump .explain("formatted") for one or more contract/bench queries to
 plans/<dir>/<name>_<tag>.txt.  Usage::
 
-    python scripts/dump_plan.py r16 before d03_dedup_minhash_lsh s05_bm25 ...
+    python scripts/dump_plan.py lsh before d03_dedup_minhash_lsh s05_bm25 ...
 """
 from __future__ import annotations
 

@@ -1,21 +1,21 @@
 #!/usr/bin/env python3
-"""Isolate the exact-DECIMAL money-sum cost on the q06 aggregate shape
-(round-10 verdict ask #4): time the three candidate sum spellings on
-lineitem, confirm map-side partial aggregation for the decimal path,
-and print one JSON line per sf_dir.
+"""Isolate the exact-DECIMAL money-sum cost on the q06 aggregate shape:
+time the three candidate sum spellings on lineitem, confirm map-side
+partial aggregation for the decimal path, and print one JSON line per
+sf_dir.
 
 Spellings measured (the q06 money columns only — the rest of the
 aggregate is identical across variants):
 
 * ``double``      — SUM(double) + ROUND(.., 2/4): the fast form q06
-                    used through round 9.  Order-dependent; ROUND on a
+                    once used.  Order-dependent; ROUND on a
                     .005 boundary can flip cross-engine.
-* ``decimal``     — SUM(CAST(x AS DECIMAL(18,2)/(18,4))): q06 since
-                    round 10.  Exact, order-independent; Spark widens
+* ``decimal``     — SUM(CAST(x AS DECIMAL(18,2)/(18,4))): what q06
+                    runs.  Exact, order-independent; Spark widens
                     the accumulator to decimal(28,2)/(28,4), overflow
                     at ~1e26 — safe for any conceivable money total.
 * ``scaled_bigint`` — SUM(CAST(ROUND(x*100) AS BIGINT))/100: measured
-                    REFERENCE ONLY; rejected in round 10 because the
+                    REFERENCE ONLY; rejected because the
                     accumulator ceiling is 9.2e18 scaled units — a
                     100 TB global money sum overflows it silently in
                     non-ANSI mode.

@@ -1,17 +1,17 @@
 #!/usr/bin/env python3
-"""One-pass sf1 smoke of the headline suite (round-10 verdict ask #5):
-run every headline query once at a 10× scale factor, printing each
-timing AS IT COMPLETES (a crash loses nothing), to catch adaptive
-gates mis-sized by 10× (d02 dense/prefix switch, d05 LSH threshold,
-ANN candidate volumes, MG capacity validation).
+"""One-pass sf1 smoke of the headline suite: run every headline query
+once at a 10× scale factor, printing each timing AS IT COMPLETES (a
+crash loses nothing), to catch adaptive gates mis-sized by 10× (d02
+dense/prefix switch, d05 LSH threshold, ANN candidate volumes, MG
+capacity validation).
 
 Deliberately on-disk shuffle scratch: tmpfs pages are RAM, and the
 first sf1 attempt OOM-killed the JVM after piling 88 GB of shuffle
-files into /dev/shm (the round-11 lesson now guarded in bench.py).
+files into /dev/shm (bench.py guards against it too).
 
 Usage::
 
-    python scripts/sf1_smoke.py [sf_dir] [--warm-dir D]
+    python scripts/sf1_smoke.py [sf_dir] [--warm-dir D] [--only a,b]
 """
 from __future__ import annotations
 
@@ -32,8 +32,8 @@ from dfsql_spark.session import get_spark  # noqa: E402
 
 
 def _scale_extras():
-    """Round-12 additions (verdict r11 ask #4): the round-11 session-2
-    heavies that are NOT in bench.py's HEADLINE get sf1 rows here, so
+    """Heavy library operators that are NOT in bench.py's HEADLINE get
+    sf1 rows here, so
     a gate mis-sized by 10x is caught the way d02's was — the minhash
     mode of the overlap matrix (banded LSH volume), the Zipf report
     (vocabulary-sized stats agg), and the shard export (hash-
@@ -89,7 +89,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     extras = _scale_extras()
     qs = {**em.queries(), **em.bench_extras(), **extras,
-          # round-15 contract retiree, still smoked
           "w02_url_host": em.w02_url_host}
 
     def run(df):
@@ -99,22 +98,22 @@ def main() -> None:
     failures: dict = {}
     from dfsql_spark.operators.dedup import LAST_NGRAM_STRATEGY
 
-    # contract entries not in bench.py's HEADLINE that still deserve a
-    # 10x row: the round-12 promotions as a set (verdict r12 ask #4 —
-    # b_crawl_frontend proxies n01 only partially) and the round-13
-    # promotions (d16 composes dedup_report over the exact-Jaccard
-    # pair graph, a different upstream than the round-12 library smoke
-    # timed)
+    # entries not in bench.py's HEADLINE that still deserve a 10x row
+    # (b_crawl_frontend proxies n01 only partially; d06 and d16 run
+    # connected components and dedup_report over the exact-Jaccard
+    # pair graph; x08 is b_distribution_drift's contract shape)
     contract_adds = [
         "n01_html_to_text",
         "c01_code_filters",
         "t26_tfidf_top_terms",
         "x06_column_profile",
         "s07_ann_recall",
+        "d06_dedup_connected",
         "d16_dedup_report",
         "t27_grouped_split",
         "w02_url_host",
         "x07_group_keep_report",
+        "x08_distribution_drift",
     ]
     names = list(HEADLINE) + contract_adds + list(extras)
     if args.only:

@@ -1,6 +1,6 @@
-"""Mirror of the driver's correctness gate: every ``queries()`` entry
-with an ``oracle_sql()`` entry must match DuckDB on the same parquet
-tables (row count + sorted-column + order-insensitive values)."""
+"""The contract's correctness gate: every ``queries()`` entry must match
+its ``oracle_sql()`` entry run by DuckDB on the same parquet tables
+(row count + sorted-column + order-insensitive values)."""
 
 from __future__ import annotations
 
@@ -29,12 +29,14 @@ def test_every_query_has_callable():
 def test_oracle_keys_subset_of_queries():
     missing = set(ORACLES) - set(QUERIES)
     assert not missing, f"oracle_sql keys without queries(): {missing}"
+    unbacked = set(QUERIES) - set(ORACLES)
+    assert not unbacked, f"queries() entries without oracle_sql(): {unbacked}"
 
 
 def test_bench_extras_stay_out_of_the_contract(spark):
     """bench_extras() entries are timing-only: they must never leak
-    into queries()/oracle_sql() (the driver would grade them without
-    an oracle), and each must still run."""
+    into queries()/oracle_sql() (the contract is oracle-backed
+    entries only), and each must still run."""
     extras = entry_mod.bench_extras()
     assert extras
     overlap = set(extras) & (set(QUERIES) | set(ORACLES))
@@ -43,50 +45,11 @@ def test_bench_extras_stay_out_of_the_contract(spark):
         assert fn(spark, SF_DIR).count() >= 0, name
 
 
-def test_sitting_out_oracles_are_frozen():
-    """Grade-window hygiene (round-10 codification of the t03 lesson):
-    the rotation invariant — "changed ⇒ graded same round" — covers
-    ORACLE-side edits, not just engine code.  Every contract entry's
-    oracle text is hashed into tests/oracle_hashes.json; an edit to a
-    SITTING-OUT entry's oracle fails here until the entry moves into
-    the graded window (regenerate via scripts/regen_oracle_hashes.py
-    ONLY in the same change that grades the edited entry)."""
-    import hashlib
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "oracle_hashes.json")
-    with open(path) as f:
-        pinned = json.load(f)
-    # completeness: every contract entry is pinned, no stale pins
-    assert set(pinned) == set(ORACLES), (
-        "oracle_hashes.json out of sync with oracle_sql() — regenerate "
-        "via scripts/regen_oracle_hashes.py (contract add/remove only)"
-    )
-    changed = [
-        name
-        for name in entry_mod._SIT_OUT_THIS_ROUND
-        if name in ORACLES
-        and hashlib.sha256(ORACLES[name].encode("utf-8")).hexdigest()[:16]
-        != pinned[name]
-    ]
-    assert not changed, (
-        f"oracle text changed for SITTING-OUT entries {changed}: move "
-        "them into the graded window (changed ⇒ graded same round)"
-    )
-
-
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
     spark_df = QUERIES[name](spark, SF_DIR)
     duck_df = duck.sql(ORACLES[name]).df()
     assert_matches_oracle(spark_df, duck_df, name)
-
-
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_query_without_oracle_runs(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
-    assert df.count() >= 0
 
 
 def test_w04_pagerank_ranks_bit_identical_to_oracle(spark, duck):

@@ -1,20 +1,17 @@
-"""Mechanical operator-inventory audit (round-10 verdict ask #2 — the
-COVERAGE twin of ``test_sitting_out_oracles_are_frozen``).
+"""Mechanical operator-inventory audit.
 
-`perplexity_buckets` slipped into a round-9 snapshot commit with zero
-tests, zero COVERAGE.md row, zero contract entry — the only operator
-ever to land outside the repo's every-operator-has-an-oracle
-discipline, and nothing caught it for a full round.  This test makes
-that class of gap impossible: every PUBLIC callable defined in an
-operator module must be
+`perplexity_buckets` once landed with zero tests, zero COVERAGE.md
+row and zero contract entry — the only operator ever to land outside
+the repo's every-operator-has-an-oracle discipline, and nothing caught
+it.  This test makes that class of gap impossible: every PUBLIC
+callable defined in an operator module must be
 
 * referenced by name in at least one ``tests/*.py`` file, AND
-* referenced by name in ``COVERAGE.md`` (a table row or the
-  round-notes prose — the judge reads COVERAGE.md as the operator
-  index, so an undocumented operator is invisible to users and
-  graders alike).
+* referenced by name in ``COVERAGE.md`` (a table row or the notes
+  prose — COVERAGE.md is the operator index, so an undocumented
+  operator is invisible to users).
 
-Scope is the operator surface the verdict enumerates: every module
+Scope is the operator surface: every module
 under ``dfsql_spark/operators/`` plus the streaming library.  Core
 engine modules (datasource/dialect/commands/...) are exercised through
 the reference-parity suite, which pins the reference API surface 1:1

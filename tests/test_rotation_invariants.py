@@ -1,115 +1,13 @@
-"""Suite-enforced rotation accounting (round 15): the invariants the
-per-round verdict checks by hand over `_SIT_OUT_THIS_ROUND` and the
-driver's CORRECTNESS files become pytest assertions against the
-LATEST checked-in CORRECTNESS_r*.json (= the previous round's graded
-block, since the current round's file lands only at round end).
-
-The three `_ROTATION_*` tuples in `__spark_entry__.py` are the
-per-round inputs; forgetting to update them in a rotation rewrite
-fails here loudly — which is the point.
-"""
+"""The contract does not rotate: ``queries()`` returns the same 100
+entries, in one fixed order (by name), on every call."""
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
-
 import __spark_entry__ as em
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _prev_round_grades() -> "tuple[int, dict]":
-    best = (-1, None)
-    for p in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best[0]:
-            best = (int(m.group(1)), p)
-    assert best[1], "no CORRECTNESS_r*.json checked in"
-    with open(best[1]) as f:
-        return best[0], json.load(f)
 
 
 def test_contract_shape():
     qs = list(em.queries())
-    sit = set(em._SIT_OUT_THIS_ROUND)
     assert len(qs) == 100 and len(set(qs)) == 100
-    assert len(sit) == 50 and sit <= set(qs)
-    # the driver captures the FIRST 50 rows: they must be exactly the
-    # non-sit-outs, in order
-    assert set(qs[:50]) == set(qs) - sit
-    assert set(qs[50:]) == sit
-
-
-def test_sit_outs_come_from_last_graded_block_and_were_green():
-    """Every resting entry was graded last round — and graded GREEN
-    (rows+schema+hash) — except the documented swap picks."""
-    rnd, prev = _prev_round_grades()
-    extra = set(em._ROTATION_SIT_OUT_EXTRA)
-    offenders, red = [], []
-    for s in em._SIT_OUT_THIS_ROUND:
-        if s in prev:
-            row = prev[s]
-            if s not in em._ROTATION_REGRADED and not (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                red.append(s)
-        elif s not in extra:
-            offenders.append(s)
-    assert not offenders, (
-        f"sit-outs neither graded in r{rnd} nor documented as swap "
-        f"picks (they would go silently ungraded 2+ rounds): {offenders}"
-    )
-    assert not red, (
-        f"sit-outs that were RED in r{rnd} are resting instead of "
-        f"being regraded: {red}"
-    )
-
-
-def test_graded_entries_rested_or_are_new_or_changed():
-    """No entry is graded two rounds running unless it changed
-    (changed => graded) or just entered the contract."""
-    rnd, prev = _prev_round_grades()
-    qs = list(em.queries())
-    sit = set(em._SIT_OUT_THIS_ROUND)
-    graded = [n for n in qs if n not in sit]
-    regraded = set(em._ROTATION_REGRADED)
-    new = set(em._ROTATION_NEW_THIS_ROUND)
-    assert new <= set(graded), "promotions must take a first-round grade"
-    assert not (new & set(prev)), (
-        f"entries declared new were already graded in r{rnd}"
-    )
-    assert regraded <= set(graded), (
-        "changed => graded: regraded entries must be in the window"
-    )
-    repeat = [
-        g for g in graded if g in prev and g not in regraded and g not in new
-    ]
-    assert not repeat, (
-        f"graded in r{rnd} AND this round without a changed/regrade "
-        f"declaration: {repeat}"
-    )
-
-
-def test_red_rows_from_last_round_are_regraded():
-    """A driver-red entry may not rest: it must be in this round's
-    graded window (the x06 r14->r15 path) or out of the contract."""
-    rnd, prev = _prev_round_grades()
-    qs = set(em.queries())
-    sit = set(em._SIT_OUT_THIS_ROUND)
-    stuck = [
-        name
-        for name, row in prev.items()
-        if name in qs
-        and name in sit
-        and not (
-            row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match")
-        )
-    ]
-    assert not stuck, f"r{rnd}-red entries resting instead of regrading: {stuck}"
+    assert qs == sorted(qs)
+    assert list(em.queries()) == qs
